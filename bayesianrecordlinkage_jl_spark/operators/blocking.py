@@ -53,24 +53,6 @@ def key_blocking(
     )
 
 
-def lsh_band_keys(
-    df: DataFrame,
-    text_col: str,
-    n_bands: int = 4,
-    rows_per_band: int = 2,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Append an array column `lsh_bands` of deterministic MinHash-LSH band
-    keys (hand-rolled portable hashing, no pyspark.ml dependency)."""
-    bands = F.array(
-        *[
-            T.minhash_band(F.col(text_col), band, rows_per_band, shingle_k)
-            for band in range(n_bands)
-        ]
-    )
-    return df.withColumn("lsh_bands", bands)
-
-
 def lsh_blocking(
     df: DataFrame,
     id_col: str,

@@ -16,6 +16,8 @@ component.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -136,91 +138,89 @@ def components_with_isolated(
     )
 
 
-def size_capped_components(
+def _nodes(edges: DataFrame) -> DataFrame:
+    """Distinct endpoints of an edge table, as (node)."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _flush(edges: DataFrame, t: float, flag: str) -> DataFrame:
+    """Components still to split, flagged `flag` = true (incl. nodes
+    isolated at threshold t). t must be the threshold the split check was
+    MEASURED at — flushing one incr higher would fragment components and
+    mislabel pieces that already pass the check as flagged."""
+    return components_with_isolated(
+        edges.where(F.col("w") > t), _nodes(edges)
+    ).select("node", "component", F.lit(True).alias(flag))
+
+
+def _threshold_split(
     weighted_edges: DataFrame,
-    max_pairs: int,
-    threshold: float = 0.0,
-    incr: float = 0.01,
-    max_rounds: int = 50,
+    to_split,
+    flag: str,
+    threshold: float,
+    incr: float,
+    max_rounds: int,
 ) -> DataFrame:
-    """iterative_bipartite_cluster2 analog
-    (/root/reference/src/clustering_functions.jl:390-489): cluster at the
-    base threshold, then re-cluster every oversized component (pair count >
-    max_pairs) at progressively higher thresholds until all components fit
-    or an unsplittable hot block remains (the reference warns, :465 — we
-    return it flagged with `capped = true` so callers can salt/prune it).
+    """The iterative_bipartite_cluster2 round loop (reference
+    src/clustering_functions.jl:390-489): cluster the active edges above
+    the threshold, emit every component that passes, keep only the edges
+    inside the components `to_split` names, raise the threshold by incr and
+    repeat — until nothing is left to split, the remaining blocks are
+    unsplittable (no active edge would drop at the next threshold), or
+    max_rounds runs out. Leftovers are returned with `flag` = true (the
+    reference warns, :465).
 
-    This IS the skew-splitting stage: at web scale a boilerplate-heavy hot
-    block would otherwise blow up the per-block solver.
+    to_split(above, cc) -> DataFrame(component): the component ids of cc
+    that must split again, given the round's above-threshold edges.
+    Returns (node, component, flag).
 
-    weighted_edges: (src, dst, w). Returns (node, component, capped).
+    incr granularity contract: a raise that would drop NO active edge
+    declares the block unsplittable and flushes it flagged — pick incr fine
+    enough that each raise crosses at least one remaining edge weight, or
+    accept the flag as "no progress at this schedule".
+
+    Per round: the CC passes plus six Spark actions (isolated, to-split and
+    ok checkpoints, the emptiness probe, the restricted-edge checkpoint and
+    one scalar aggregate).
     """
-    e = weighted_edges.select(
+    active = weighted_edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long"), F.col("w")
     ).localCheckpoint()
     done_parts: list[DataFrame] = []
     cur_t = threshold
-    active = e
-
-    def _flush_capped(edges_df: DataFrame, t: float) -> DataFrame:
-        """Remaining oversized components, flagged capped=true (incl. nodes
-        isolated at threshold t). t must be the threshold the cap check was
-        MEASURED at — flushing one incr higher would fragment components and
-        mislabel sub-cap pieces as capped."""
-        nodes = (
-            edges_df.select(F.col("src").alias("node"))
-            .union(edges_df.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        return components_with_isolated(edges_df.where(F.col("w") > t), nodes).select(
-            "node", "component", F.lit(True).alias("capped")
-        )
-
-    # threshold at which the most recent oversized-check was evaluated
+    # threshold at which the most recent split check was evaluated
     # (cur_t gets raised at the END of each round, so on max_rounds
     # exhaustion cur_t is one incr above the measured level)
     measured_t = cur_t
     for _ in range(max_rounds):
         measured_t = cur_t
-        cc = connected_components(active.where(F.col("w") > cur_t))
+        above = active.where(F.col("w") > cur_t)
+        cc = connected_components(above)
         # nodes whose every edge fell below the raised threshold become
         # singletons NOW — without this they appear in no component and
         # vanish from the output
-        nodes_active = (
-            active.select(F.col("src").alias("node"))
-            .union(active.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        isolated = nodes_active.join(cc, on="node", how="left_anti").select(
-            "node",
-            F.col("node").alias("component"),
-            F.lit(False).alias("capped"),
+        isolated = _nodes(active).join(cc, on="node", how="left_anti").select(
+            "node", F.col("node").alias("component"), F.lit(False).alias(flag)
         )
         done_parts.append(isolated.localCheckpoint())
-        # pair count per component = edges above threshold per component;
-        # checkpointed (<= #components rows) because it feeds the ok/over
-        # splits AND the round's scalar convergence aggregate
-        ec = (
-            active.where(F.col("w") > cur_t)
-            .join(cc.withColumnRenamed("node", "src"), on="src")
-            .groupBy("component")
-            .agg(F.count(F.lit(1)).alias("n_pairs"))
-            .localCheckpoint()
-        )
-        labeled = cc.join(ec, on="component")
-        ok = labeled.where(F.col("n_pairs") <= max_pairs).select(
-            "node", "component", F.lit(False).alias("capped")
+        # tiny (<= #components rows); consumed by ok / over / the probe
+        dirty = to_split(above, cc).localCheckpoint()
+        ok = cc.join(dirty, on="component", how="left_anti").select(
+            "node", "component", F.lit(False).alias(flag)
         )
         done_parts.append(ok.localCheckpoint())
-        # convergence from one tiny aggregate over the per-component
-        # counts, not a probe scan of the node-level labeled join
-        mx = ec.agg(F.max("n_pairs").alias("mx")).collect()[0]["mx"]
-        if mx is None or mx <= max_pairs:
+        # a dirty component always has nodes, so probing the checkpointed
+        # component set replaces a node-level probe
+        if dirty.limit(1).count() == 0:
             break
-        over = labeled.where(F.col("n_pairs") > max_pairs).select("node")
-        # restrict to edges with BOTH endpoints inside oversized components
+        over = cc.join(dirty, on="component", how="left_semi").select("node")
+        # restrict to edges with BOTH endpoints inside dirty components
         # (a src-only restriction leaks below-threshold edges into nodes
-        # already emitted, double-counting them next round); raise threshold
+        # already emitted, double-counting them next round)
         active = (
             active.join(
                 over.withColumnRenamed("node", "src"), on="src", how="left_semi"
@@ -231,8 +231,7 @@ def size_capped_components(
         new_t = cur_t + incr
         # unsplittable: no edge would be dropped by the higher threshold —
         # ONE aggregate over the (just-checkpointed) restricted edges
-        # supplies both emptiness signals (was two limit(1).count() probe
-        # jobs per round)
+        # supplies both emptiness signals
         row = active.agg(
             F.count(
                 F.when((F.col("w") > cur_t) & (F.col("w") <= new_t), 1)
@@ -240,18 +239,50 @@ def size_capped_components(
             F.count(F.when(F.col("w") <= cur_t, 1)).alias("below"),
         ).collect()[0]
         if row["drop_next"] == 0 and row["below"] == 0:
-            done_parts.append(_flush_capped(active, cur_t))
+            done_parts.append(_flush(active, cur_t, flag))
             break
         cur_t = new_t
     else:
-        # max_rounds exhausted with oversized components still active: flush
+        # max_rounds exhausted with dirty components still active: flush
         # them flagged rather than dropping their nodes from the output, at
-        # the threshold the final cap check actually used
-        done_parts.append(_flush_capped(active, measured_t))
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out
+        # the threshold the final split check actually used
+        done_parts.append(_flush(active, measured_t, flag))
+    return functools.reduce(DataFrame.unionByName, done_parts)
+
+
+def size_capped_components(
+    weighted_edges: DataFrame,
+    max_pairs: int,
+    threshold: float = 0.0,
+    incr: float = 0.01,
+    max_rounds: int = 50,
+) -> DataFrame:
+    """iterative_bipartite_cluster2 analog (reference
+    src/clustering_functions.jl:390-489): cluster at the base threshold,
+    then re-cluster every oversized component (pair count > max_pairs) at
+    progressively higher thresholds until all components fit or an
+    unsplittable hot block remains (the reference warns, :465 — we return
+    it flagged with `capped = true` so callers can salt/prune it).
+
+    This IS the skew-splitting stage: at web scale a boilerplate-heavy hot
+    block would otherwise blow up the per-block solver.
+
+    weighted_edges: (src, dst, w). Returns (node, component, capped).
+    """
+
+    def oversized(above: DataFrame, cc: DataFrame) -> DataFrame:
+        # pair count per component = edges above threshold per component
+        return (
+            above.join(cc.withColumnRenamed("node", "src"), on="src")
+            .groupBy("component")
+            .agg(F.count(F.lit(1)).alias("n_pairs"))
+            .where(F.col("n_pairs") > max_pairs)
+            .select("component")
+        )
+
+    return _threshold_split(
+        weighted_edges, oversized, "capped", threshold, incr, max_rounds
+    )
 
 
 def cannot_link_components(
@@ -264,7 +295,7 @@ def cannot_link_components(
     """Constraint-aware cluster repair: connected components under
     cannot-link constraints, resolved by threshold raising.
 
-    Same iterative skeleton as size_capped_components (the reference's
+    Same round loop as size_capped_components (the reference's
     iterative_bipartite_cluster2 shape,
     /root/reference/src/clustering_functions.jl:390-489) with the
     oversize predicate replaced by a constraint-violation predicate: a
@@ -286,17 +317,9 @@ def cannot_link_components(
     weighted_edges: (src, dst, w). cannot_link: (id_a, id_b) pairs that
     must not share a component (canonicalized + deduped here; self-pairs
     dropped — they are unsatisfiable and meaningless).
-    Returns (node, component, violated).
-
-    incr granularity contract (same as size_capped_components): a raise
-    that would drop NO active edge declares the block unsplittable and
-    flushes it flagged — pick incr fine enough that each raise crosses at
-    least one remaining edge weight, or accept the flag as "no progress at
-    this schedule".
+    Returns (node, component, violated). The incr granularity contract of
+    _threshold_split applies.
     """
-    e = weighted_edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long"), F.col("w")
-    ).localCheckpoint()
     kl = (
         cannot_link.select(
             F.greatest(F.col("id_a").cast("long"), F.col("id_b").cast("long")).alias("id_a"),
@@ -306,43 +329,11 @@ def cannot_link_components(
         .distinct()
         .localCheckpoint()  # consumed once per round
     )
-    done_parts: list[DataFrame] = []
-    cur_t = threshold
-    active = e
 
-    def _flush_violated(edges_df: DataFrame, t: float) -> DataFrame:
-        """Remaining dirty components, flagged violated=true (incl. nodes
-        isolated at threshold t) — t must be the threshold the violation
-        check was MEASURED at (same invariant as size_capped's flush)."""
-        nodes = (
-            edges_df.select(F.col("src").alias("node"))
-            .union(edges_df.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        return components_with_isolated(
-            edges_df.where(F.col("w") > t), nodes
-        ).select("node", "component", F.lit(True).alias("violated"))
-
-    measured_t = cur_t
-    for _ in range(max_rounds):
-        measured_t = cur_t
-        cc = connected_components(active.where(F.col("w") > cur_t))
-        nodes_active = (
-            active.select(F.col("src").alias("node"))
-            .union(active.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        # singletons can never hold a distinct-node constraint pair: clean
-        isolated = nodes_active.join(cc, on="node", how="left_anti").select(
-            "node",
-            F.col("node").alias("component"),
-            F.lit(False).alias("violated"),
-        )
-        done_parts.append(isolated.localCheckpoint())
-        dirty = (
-            kl.join(
-                cc.select(F.col("node").alias("id_a"), "component"), on="id_a"
-            )
+    def violated(_above: DataFrame, cc: DataFrame) -> DataFrame:
+        # singletons can never hold a distinct-node constraint pair
+        return (
+            kl.join(cc.select(F.col("node").alias("id_a"), "component"), on="id_a")
             .join(
                 cc.select(
                     F.col("node").alias("id_b"),
@@ -353,44 +344,11 @@ def cannot_link_components(
             .where(F.col("component") == F.col("component_b"))
             .select("component")
             .distinct()
-            .localCheckpoint()  # tiny; consumed by ok / over / the probe
         )
-        ok = cc.join(dirty, on="component", how="left_anti").select(
-            "node", "component", F.lit(False).alias("violated")
-        )
-        done_parts.append(ok.localCheckpoint())
-        # a dirty component always has nodes, so probing the checkpointed
-        # component set replaces the node-level over-join probe
-        if dirty.limit(1).count() == 0:
-            break
-        over = cc.join(dirty, on="component", how="left_semi").select("node")
-        active = (
-            active.join(
-                over.withColumnRenamed("node", "src"), on="src", how="left_semi"
-            )
-            .join(over.withColumnRenamed("node", "dst"), on="dst", how="left_semi")
-            .localCheckpoint()
-        )
-        new_t = cur_t + incr
-        # unsplittable: raising the threshold would drop no edge — ONE
-        # aggregate supplies both emptiness signals (was two
-        # limit(1).count() probe jobs per round)
-        row = active.agg(
-            F.count(
-                F.when((F.col("w") > cur_t) & (F.col("w") <= new_t), 1)
-            ).alias("drop_next"),
-            F.count(F.when(F.col("w") <= cur_t, 1)).alias("below"),
-        ).collect()[0]
-        if row["drop_next"] == 0 and row["below"] == 0:
-            done_parts.append(_flush_violated(active, cur_t))
-            break
-        cur_t = new_t
-    else:
-        done_parts.append(_flush_violated(active, measured_t))
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+    return _threshold_split(
+        weighted_edges, violated, "violated", threshold, incr, max_rounds
+    )
 
 
 def threshold_sensitivity(

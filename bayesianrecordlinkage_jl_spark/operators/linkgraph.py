@@ -1253,6 +1253,15 @@ def scc_hosts(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     iterative graph fixpoint (documented cap, same caveat as
     connected_components' max_iter).
 
+    Cost on deep graphs: each COLOR/RESOLVE pass (_min_label_fixpoint)
+    takes O(diameter) rounds — one edge->label join plus one label
+    checkpoint per round, i.e. one Spark job pair per hop — and its bound
+    grows to n_active + 1, not max_rounds, so it converges instead of
+    failing. TRIM peels only the DAG periphery, not cycles: a long cycle
+    over millions of hosts runs millions of rounds (hours of wall clock)
+    before it converges or raises. Bound the input (e.g. drop low-weight
+    links) before calling this on adversarial graphs.
+
     Reference analog: clustering_functions.jl's components are
     undirected; SCC extends the family to the directed crawl graph."""
     e = (

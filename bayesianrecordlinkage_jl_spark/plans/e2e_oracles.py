@@ -37,6 +37,13 @@ from ..functions import comparators as C
 from ..functions import text as T
 from ..functions.text import phash_sql
 from ..sources.pages import VOCAB
+from .pipeline import (
+    KEY_BLOCK_MAX_ROWS,
+    LEV_PREFIX,
+    N_BANDS,
+    ROWS_PER_BAND,
+    SHINGLE_K,
+)
 
 _FROZEN_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "e2e_frozen.json"
@@ -197,16 +204,10 @@ FROM mut m JOIN resolved r ON r.block_id = m.block_id
 
 # ---------------------------------------------------------------------------
 # pages_linkage_clusters: frozen page rows; blocking/scoring/clustering in SQL
-# (mirrors plans/pipeline.py:run_linkage with LinkageConfig defaults:
-# n_bands=6, rows_per_band=1, shingle_k=3, lev_prefix=80,
-# key_block_max_rows=64, lsh max_bucket_rows=1000, penalty=2.0)
+# (mirrors plans/pipeline.py:run_linkage: its blocking/scoring constants,
+# lsh_blocking's max_bucket_rows=1000, LinkageConfig's penalty=2.0)
 # ---------------------------------------------------------------------------
 
-PAGES_N_BANDS = 6
-PAGES_ROWS_PER_BAND = 1
-PAGES_SHINGLE_K = 3
-PAGES_LEV_PREFIX = 80
-PAGES_KEY_BLOCK_MAX_ROWS = 64
 PAGES_LSH_MAX_BUCKET_ROWS = 1000
 
 
@@ -233,8 +234,8 @@ def pages_linkage_clusters_sql() -> str:
     penalty = fz["penalty"]
     pvals = _pages_values(fz["pages"])
     band_keys = ", ".join(
-        T.band_key_from_hashes_sql("shh", band, PAGES_ROWS_PER_BAND)
-        for band in range(PAGES_N_BANDS)
+        T.band_key_from_hashes_sql("shh", band, ROWS_PER_BAND)
+        for band in range(N_BANDS)
     )
     # LSH bucket salt (blocking.salt_buckets window form; fixture buckets
     # are all far under the 1000-row cap, so every salt is 0 — kept for
@@ -242,8 +243,8 @@ def pages_linkage_clusters_sql() -> str:
     nbk = "count(*) OVER (PARTITION BY band_key)"
     nbs = f"CAST(ceil(CAST({nbk} AS DOUBLE) / {PAGES_LSH_MAX_BUCKET_ROWS}e0) AS BIGINT)"
     bsalt = f"CAST({phash_sql('CAST(node AS VARCHAR)')} % {nbs} AS INT)"
-    lev_a = f"substr(da.text, 1, {PAGES_LEV_PREFIX})"
-    lev_b = f"substr(db.text, 1, {PAGES_LEV_PREFIX})"
+    lev_a = f"substr(da.text, 1, {LEV_PREFIX})"
+    lev_b = f"substr(db.text, 1, {LEV_PREFIX})"
     return f"""
 WITH RECURSIVE
 pages(url, text, lang) AS (VALUES
@@ -255,7 +256,7 @@ docs AS MATERIALIZED (
   FROM pages
 ),
 hashed AS MATERIALIZED (
-  SELECT node, {T.shingle_hashes_sql("text", PAGES_SHINGLE_K)} AS shh
+  SELECT node, {T.shingle_hashes_sql("text", SHINGLE_K)} AS shh
   FROM docs
 ),
 banded AS MATERIALIZED (
@@ -264,8 +265,8 @@ banded AS MATERIALIZED (
 salted AS MATERIALIZED (
   SELECT node, band_key, {bsalt} AS bsalt FROM banded
 ),
-ksl AS MATERIALIZED ({_key_salt_cte("lang", PAGES_KEY_BLOCK_MAX_ROWS)}),
-ksh AS MATERIALIZED ({_key_salt_cte("host", PAGES_KEY_BLOCK_MAX_ROWS)}),
+ksl AS MATERIALIZED ({_key_salt_cte("lang", KEY_BLOCK_MAX_ROWS)}),
+ksh AS MATERIALIZED ({_key_salt_cte("host", KEY_BLOCK_MAX_ROWS)}),
 cand AS MATERIALIZED (
   SELECT DISTINCT id_a, id_b FROM (
     SELECT a.node AS id_a, b.node AS id_b

@@ -19,19 +19,30 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import comparators as C
 from ..functions.text import phash
 from ..operators import assignment, blocking, em
+from ..operators import connected_components as ccm
 from ..operators.comparison_summary import ComparisonSummary
-from ..operators.connected_components import (
-    components_with_isolated,
-    connected_components,
-)
 from ..sources.checkpoint import StageStore
 from ..sources.pages import extract_text
+
+# MinHash-LSH blocking bands (plans/e2e_oracles.py imports these constants
+# for its SQL twin)
+N_BANDS = 6
+ROWS_PER_BAND = 1
+SHINGLE_K = 3
+# levenshtein compares per-doc text prefixes of this many characters
+LEV_PREFIX = 80
+# salted composite-key blocking (lang / host): supplies the non-match
+# background EM needs for identifiability AND a recall backstop; salt caps
+# block size (skew control)
+KEY_BLOCK_MAX_ROWS = 64
+EM_MAX_ITER = 200
+# threshold step of the size-capped block split
+BLOCK_SPLIT_INCR = 0.5
 
 
 @dataclass
@@ -40,66 +51,39 @@ class LinkageConfig:
     # iff posterior match probability > 1/2 (the reference's Bayes-estimate
     # rule, README.md:148-151, in MAP form)
     penalty: float | str = 2.0
-    n_bands: int = 6
-    rows_per_band: int = 1
-    shingle_k: int = 3
-    lev_prefix: int = 80
-    # salted composite-key blocking (lang / host): supplies the non-match
-    # background EM needs for identifiability AND a recall backstop; salt
-    # caps block size (skew control)
-    key_block_max_rows: int = 64
     # per-block solver: hungarian / greedy / auction (MAP matching), or
     # "exact_posterior" = the reference's Bayes estimate (link iff exact
     # posterior marginal > 1/2, enumerated per block; blocks above
     # exact_max_block_pairs fall back to Hungarian MAP)
     method: str = "hungarian"
     exact_max_block_pairs: int = 10
-    use_em: bool = True
-    em_max_iter: int = 200
     # cap on pairs per resolution block; oversized components are re-clustered
     # at rising thresholds (iterative_bipartite_cluster2 analog) so no block
-    # can blow up the per-block solver at scale. None disables.
-    max_block_pairs: int | None = 10_000
-    block_split_incr: float = 0.5
+    # can blow up the per-block solver at scale
+    max_block_pairs: int = 10_000
     checkpoint_dir: str | None = None
 
     def as_dict(self) -> dict:
         return {k: getattr(self, k) for k in self.__dataclass_fields__}
 
 
-# comparison fields: (name, weight-kind) — must stay in lockstep with
-# _field_exprs below.
-FIELDS: list[tuple[str, str]] = [
-    ("g_lev", "lev"),
-    ("g_jac", "jac"),
-    ("g_lang", "exact"),
-]
+# comparison fields and their level counts
 NLEVELS = {"g_lev": 4, "g_jac": 4, "g_lang": 2}
 
 
-def _field_exprs(cfg: LinkageConfig) -> dict:
-    return {
-        "g_lev": C.lev_ord(
-            F.substring("text_a", 1, cfg.lev_prefix),
-            F.substring("text_b", 1, cfg.lev_prefix),
-        ),
-        "g_jac": C.token_jaccard_ord(F.col("text_a"), F.col("text_b")),
-        "g_lang": C.bool_ord(F.col("lang_a"), F.col("lang_b")),
-    }
-
-
-def _score_vectors(spark: SparkSession, pairs: DataFrame, cfg: LinkageConfig) -> DataFrame:
+def _score_vectors(pairs: DataFrame) -> DataFrame:
     """Comparison vectors with each comparator kernel evaluated exactly
     once per pair: raw measures (banded levenshtein on per-doc prefixes,
     token-set intersect on per-doc distinct-token arrays) in one pre-shuffle
     projection, pair-key aggregate barrier, then integer bin CASEs. The
     result is localCheckpointed because both the distinct-vector dedup and
     the vec_id attach branch from it (without materialization each branch
-    would re-run the comparators). Value-identical to _field_exprs."""
+    would re-run the comparators). Value-identical to C.lev_ord /
+    C.token_jaccard_ord / C.bool_ord over the full texts."""
     raw = pairs.select(
         "id_a",
         "id_b",
-        F.levenshtein("t_pre_a", "t_pre_b", cfg.lev_prefix // 2).alias("_lev"),
+        F.levenshtein("t_pre_a", "t_pre_b", LEV_PREFIX // 2).alias("_lev"),
         F.greatest(F.length("t_pre_a"), F.length("t_pre_b")).alias("_mx"),
         F.size(F.array_intersect("toks_a", "toks_b")).alias("_i"),
         (F.size("toks_a") + F.size("toks_b")).alias("_nab"),
@@ -129,6 +113,44 @@ def _resolve_penalty(penalty: float | str, params: em.FSParams | None) -> float:
         p_hat = min(max(params.p if params is not None else 0.5, 1e-12), 1 - 1e-12)
         return math.log((1.0 - p_hat) / p_hat)
     return float(penalty)
+
+
+def _weigh_and_block(
+    spark: SparkSession,
+    summary: ComparisonSummary,
+    nlevels: dict[str, int],
+    penalty: float | str,
+    components,
+    **em_kw,
+) -> tuple[DataFrame, DataFrame, DataFrame, em.FSParams | None]:
+    """Shared tail of both pipelines: EM on the distinct vectors (skipped
+    on an empty comparison table), FS weights broadcast-joined back to the
+    pairs, the resolved penalty, the positive-weight graph with weights
+    shrunk by the penalty, its blocks, and the pairs labeled by block.
+
+    components(pos) -> (node, component, ...) over pos = (id_a, id_b, w).
+    Returns (scored, comps, blocked, params)."""
+    dvecs_pd = summary.dvecs_pd()
+    params = (
+        em.estimate_em(dvecs_pd, summary.gcols, nlevels, **em_kw)
+        if len(dvecs_pd) > 0
+        else None
+    )
+    if params is not None:
+        wpd = em.weights_vector(dvecs_pd, summary.gcols, params)
+    else:  # no pairs: nothing to weigh
+        wpd = dvecs_pd[["vec_id"]].assign(w=0.0)
+    penalty = _resolve_penalty(penalty, params)
+    wdf = spark.createDataFrame(wpd, schema="vec_id long, w double")
+    scored = summary.pairs.join(F.broadcast(wdf), on="vec_id", how="left")
+    pos = scored.where(F.col("w") > penalty).withColumn(
+        "w", F.col("w") - F.lit(penalty)  # shrink_weights
+    )
+    comps = components(pos)
+    blocked = pos.join(
+        comps.withColumnRenamed("node", "id_a"), on="id_a"
+    ).withColumnRenamed("component", "block_id")
+    return scored, comps, blocked, params
 
 
 @dataclass
@@ -187,14 +209,14 @@ def run_linkage(
             docs,
             id_col="node",
             text_col="text",
-            n_bands=cfg.n_bands,
-            rows_per_band=cfg.rows_per_band,
-            shingle_k=cfg.shingle_k,
+            n_bands=N_BANDS,
+            rows_per_band=ROWS_PER_BAND,
+            shingle_k=SHINGLE_K,
         ).select("id_a", "id_b")
         keyed = []
         for key in (["lang"], ["host"]):
             salted = blocking.salt_hot_keys(
-                docs, "node", key, max_block_rows=cfg.key_block_max_rows
+                docs, "node", key, max_block_rows=KEY_BLOCK_MAX_ROWS
             )
             keyed.append(
                 blocking.key_blocking(
@@ -215,7 +237,7 @@ def run_linkage(
         proj = docs.select(
             "node",
             "lang",
-            F.substring("text", 1, cfg.lev_prefix).alias("t_pre"),
+            F.substring("text", 1, LEV_PREFIX).alias("t_pre"),
             F.array_distinct(F.split("text", " ")).alias("toks"),
         )
         fa = proj.select(
@@ -240,63 +262,25 @@ def run_linkage(
             .join(fb, "id_b")
         )
 
-    vectors = _score_vectors(spark, _pairs(), cfg)
     summary = ComparisonSummary.build(
-        vectors, {g: F.col(g) for g, _ in FIELDS}, NLEVELS
+        _score_vectors(_pairs()), {g: F.col(g) for g in NLEVELS}, NLEVELS
     )
-    gcols = summary.gcols
-    dvecs_pd = summary.dvecs_pd()
 
-    # -- parameter estimation on aggregated counts (driver numpy) ----------
-    if cfg.use_em and len(dvecs_pd) > 0:
-        params = em.estimate_em(dvecs_pd, gcols, NLEVELS, max_iter=cfg.em_max_iter)
-    else:
-        params = None
-
-    if params is not None:
-        wpd = em.weights_vector(dvecs_pd, gcols, params)
-    else:
-        from ..functions import weights as W
-
-        wpd = dvecs_pd[["vec_id"]].copy()
-        w = None
-        for g, kind in FIELDS:
-            lr = W.level_log_ratios(kind)
-            contrib = dvecs_pd[g].map(lambda lvl: lr.get(int(lvl), 0.0))
-            w = contrib if w is None else w + contrib
-        wpd["w"] = w
-
-    penalty = _resolve_penalty(cfg.penalty, params)
-    wdf = spark.createDataFrame(wpd, schema="vec_id long, w double")
-    scored = summary.pairs.join(F.broadcast(wdf), on="vec_id", how="left")
-
-    # -- positive-weight graph -> connected components -> block ids --------
-    # size-capped variant splits hot components at rising thresholds
-    # (skew control for the per-block solver)
-    def _blocks() -> DataFrame:
-        if cfg.max_block_pairs is not None:
-            from ..operators.connected_components import size_capped_components
-
-            wedges = scored.where(F.col("w") > penalty).select(
-                F.col("id_a").alias("src"),
-                F.col("id_b").alias("dst"),
-                (F.col("w") - F.lit(penalty)).alias("w"),
-            )
-            return size_capped_components(
-                wedges, cfg.max_block_pairs, 0.0, cfg.block_split_incr
-            ).select("node", "component", "capped")
-        edges = scored.where(F.col("w") > penalty).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    # -- EM weights -> positive-weight graph -> size-capped blocks ---------
+    # oversized components are split at rising thresholds (skew control for
+    # the per-block solver)
+    def _blocks(pos: DataFrame) -> DataFrame:
+        wedges = pos.select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "w"
         )
-        return connected_components(edges).withColumn("capped", F.lit(False))
+        return ccm.size_capped_components(
+            wedges, cfg.max_block_pairs, 0.0, BLOCK_SPLIT_INCR
+        ).select("node", "component", "capped")
 
-    comps = stage("components", _blocks)
-
-    blocked = (
-        scored.where(F.col("w") > penalty)
-        .join(comps.withColumnRenamed("node", "id_a"), on="id_a")
-        .withColumnRenamed("component", "block_id")
-        .withColumn("w", F.col("w") - F.lit(penalty))  # shrink_weights
+    scored, comps, blocked, params = _weigh_and_block(
+        spark, summary, NLEVELS, cfg.penalty,
+        lambda pos: stage("components", lambda: _blocks(pos)),
+        max_iter=EM_MAX_ITER,
     )
 
     # -- per-block one-to-one resolution ------------------------------------
@@ -372,7 +356,6 @@ def link_two_sources(
     id_col: str = "rec_id",
     block_cols: list[str] | None = None,
     penalty: float | str = 0.0,
-    use_em: bool = True,
     method: str = "hungarian",
 ) -> tuple[DataFrame, em.FSParams | None]:
     """Bipartite two-file linkage — the direct reference analog
@@ -382,7 +365,9 @@ def link_two_sources(
     the entity-cluster output (each record appears in at most one link).
 
     df_a/df_b must expose id_col (string/long) plus the columns consumed by
-    field_exprs with _a/_b suffixes. Returns (links, params).
+    field_exprs with _a/_b suffixes. Returns (links, params). Weights
+    always come from EM, so field_kinds is not read; it stays in the
+    positional signature its callers use.
 
     penalty="bayes" sets the threshold to -logit(p_hat) from the EM match
     prevalence — link iff posterior match probability > 1/2, the
@@ -405,32 +390,11 @@ def link_two_sources(
         pairs = a.crossJoin(b)  # only sane for vignette-scale fixtures
 
     summary = ComparisonSummary.build(pairs, field_exprs, nlevels)
-    dvecs_pd = summary.dvecs_pd()
-    params = (
-        em.estimate_em(dvecs_pd, summary.gcols, nlevels) if use_em else None
-    )
-    if params is not None:
-        wpd = em.weights_vector(dvecs_pd, summary.gcols, params)
-    else:
-        from ..functions import weights as W
-
-        w = None
-        for g, kind in field_kinds:
-            lr = W.level_log_ratios(kind)
-            contrib = dvecs_pd[g].map(lambda lvl: lr.get(int(lvl), 0.0))
-            w = contrib if w is None else w + contrib
-        wpd = pd.DataFrame({"vec_id": dvecs_pd["vec_id"], "w": w})
-    penalty = _resolve_penalty(penalty, params)
-    wdf = spark.createDataFrame(wpd, schema="vec_id long, w double")
-    scored = summary.pairs.join(F.broadcast(wdf), on="vec_id", how="left")
-    pos = scored.where(F.col("w") > penalty)
-    comps = connected_components(
-        pos.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    blocked = (
-        pos.join(comps.withColumnRenamed("node", "id_a"), on="id_a")
-        .withColumnRenamed("component", "block_id")
-        .withColumn("w", F.col("w") - F.lit(penalty))
+    _scored, _comps, blocked, params = _weigh_and_block(
+        spark, summary, nlevels, penalty,
+        lambda pos: ccm.connected_components(
+            pos.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        ),
     )
     links = assignment.one_to_one(
         blocked.select("id_a", "id_b", "w", "block_id"), method=method
@@ -442,26 +406,3 @@ def link_two_sources(
         .select("rid_a", "rid_b", "w", "block_id")
     )
     return links, params
-
-
-def pairwise_f1(clusters: DataFrame, truth_pairs: DataFrame) -> dict:
-    """Pairwise precision/recall/F1 of predicted clusters vs labeled pairs.
-
-    truth_pairs: (url_a, url_b, is_match) with url_a < url_b (positives).
-    Predicted pairs: all within-cluster url pairs (url_a < url_b).
-    """
-    a = clusters.select(F.col("url").alias("url_a"), F.col("cluster_id").alias("ca"))
-    b = clusters.select(F.col("url").alias("url_b"), F.col("cluster_id").alias("cb"))
-    pred = (
-        a.join(b, a["ca"] == b["cb"])
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b")
-    )
-    truth = truth_pairs.where("is_match").select("url_a", "url_b")
-    tp = pred.join(truth, ["url_a", "url_b"], "inner").count()
-    np_ = pred.count()
-    nt = truth.count()
-    precision = tp / np_ if np_ else 1.0
-    recall = tp / nt if nt else 1.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    return {"tp": tp, "pred": np_, "truth": nt, "precision": precision, "recall": recall, "f1": f1}

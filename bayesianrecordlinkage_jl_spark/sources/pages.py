@@ -124,17 +124,6 @@ def generate_pages(
     return pages.select("url", "warc_ts", "html", "text", "lang", "host", "cluster_id")
 
 
-def labeled_pairs(pages: DataFrame) -> DataFrame:
-    """Ground-truth positive pairs (url_a < url_b) from cluster_id."""
-    a = pages.select(F.col("url").alias("url_a"), F.col("cluster_id").alias("ca"))
-    b = pages.select(F.col("url").alias("url_b"), F.col("cluster_id").alias("cb"))
-    return (
-        a.join(b, a["ca"] == b["cb"])
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b", F.lit(True).alias("is_match"))
-    )
-
-
 def extract_text(html: Column) -> Column:
     """html binary -> extracted body text, byte-identical to `text`.
 

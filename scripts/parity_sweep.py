@@ -51,6 +51,8 @@ def main() -> None:
     json_out = None
     if "--json" in argv:
         i = argv.index("--json")
+        if i + 1 >= len(argv):
+            sys.exit("--json requires an output path")
         json_out = argv[i + 1]
         del argv[i : i + 2]
     sf = argv[0] if argv else "/root/testdata/sf0.1"

@@ -4,11 +4,12 @@ directions: every driver-contract query name appears (backticked) in
 COVERAGE.md, and every snake-case backticked token in a COVERAGE
 `Catalog` cell names a real catalog entry."""
 
+import os
 import re
 
 import __spark_entry__ as entrymod
 
-COV = "/root/repo/COVERAGE.md"
+COV = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "COVERAGE.md")
 
 # Catalog-cell tokens that are legitimately not query names (prose
 # references to the driver contract itself).

@@ -158,13 +158,15 @@ def test_size_capped_exhaustion_flushes_at_measured_threshold(spark):
     assert capped[2] and capped[3] and capped[4] and capped[5]
 
 
-# --- cannot-link constrained components (cluster repair) --------------------
+# --- threshold-split replica; cannot-link components (cluster repair) -----
 
 
-def _replica_cannot_link(edges, constraints, t0, incr, max_rounds):
-    """Pure-Python replica of cannot_link_components: same round structure,
-    union-find CC with min-id labels. edges: [(u,v,w)], constraints:
-    iterable of (a,b). Returns set of (node, component, violated)."""
+def _replica_split(edges, to_split, t0, incr, max_rounds):
+    """Pure-Python replica of the threshold-split round loop shared by
+    size_capped_components and cannot_link_components, union-find CC with
+    min-id labels. edges: [(u,v,w)]; to_split(es, comp) -> the component
+    ids still to split, given the round's above-threshold edges es [(u,v)]
+    and node -> component map comp. Returns set of (node, component, flag)."""
 
     def cc_of(es, nodes):
         parent = {n: n for n in nodes}
@@ -184,7 +186,6 @@ def _replica_cannot_link(edges, constraints, t0, incr, max_rounds):
             groups.setdefault(find(n), []).append(n)
         return {n: min(g) for g in groups.values() for n in g}
 
-    cons = {frozenset((a, b)) for a, b in constraints if a != b}
     out = []
 
     def flush(active, t):
@@ -208,12 +209,7 @@ def _replica_cannot_link(edges, constraints, t0, incr, max_rounds):
         for n in nodes_active:
             if n not in eb:
                 out.append((n, n, False))
-        dirty = {
-            comp[a]
-            for c in cons
-            for a, b in [tuple(sorted(c))]
-            if a in eb and b in eb and comp[a] == comp[b]
-        }
+        dirty = to_split(es, comp)
         for n in eb:
             if comp[n] not in dirty:
                 out.append((n, comp[n], False))
@@ -230,6 +226,78 @@ def _replica_cannot_link(edges, constraints, t0, incr, max_rounds):
         t = nt
     flush(active, measured)
     return set(out)
+
+
+def _replica_cannot_link(edges, constraints, t0, incr, max_rounds):
+    """Replica of cannot_link_components: a component is still to split
+    while it holds both ends of a distinct-node constraint pair.
+    constraints: iterable of (a,b). Returns set of (node, component,
+    violated)."""
+    cons = {tuple(sorted((a, b))) for a, b in constraints if a != b}
+
+    def dirty(es, comp):
+        return {
+            comp[a] for a, b in cons
+            if a in comp and b in comp and comp[a] == comp[b]
+        }
+
+    return _replica_split(edges, dirty, t0, incr, max_rounds)
+
+
+def _replica_size_capped(edges, max_pairs, t0, incr, max_rounds):
+    """Replica of size_capped_components: a component is still to split
+    while it holds more than max_pairs above-threshold edges. Returns set
+    of (node, component, capped)."""
+
+    def over(es, comp):
+        n = {}
+        for u, _v in es:
+            n[comp[u]] = n.get(comp[u], 0) + 1
+        return {c for c, k in n.items() if k > max_pairs}
+
+    return _replica_split(edges, over, t0, incr, max_rounds)
+
+
+def _random_weighted_graph(rng):
+    """Random simple graph on <= 12 nodes, weights on a 0.2 grid."""
+    n_nodes = int(rng.integers(5, 12))
+    n_edges = int(rng.integers(4, 20))
+    rows = []
+    seen = set()
+    for _ in range(n_edges):
+        u, v = rng.integers(0, n_nodes, size=2)
+        if u == v:
+            continue
+        u, v = int(min(u, v)), int(max(u, v))
+        if (u, v) in seen:
+            continue
+        seen.add((u, v))
+        rows.append((u, v, float(rng.choice([0.2, 0.4, 0.6, 0.8, 1.0]))))
+    return (rows or [(0, 1, 0.4)]), n_nodes
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_size_capped_matches_python_replica(spark, seed):
+    """Randomized graphs, caps and round budgets (round exhaustion
+    included) vs the pure-Python replica of the round loop (exact
+    tuple-set equality)."""
+    rng = np.random.default_rng(9000 + seed)
+    rows, _ = _random_weighted_graph(rng)
+    max_pairs = int(rng.integers(1, 5))
+    max_rounds = int(rng.integers(1, 6))
+    edges = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["src", "dst", "w"]),
+        "src long, dst long, w double",
+    )
+    got = size_capped_components(
+        edges, max_pairs, threshold=0.1, incr=0.2, max_rounds=max_rounds
+    ).toPandas()
+    got_set = {
+        (int(r.node), int(r.component), bool(r.capped))
+        for r in got.itertuples(index=False)
+    }
+    want = _replica_size_capped(rows, max_pairs, 0.1, 0.2, max_rounds)
+    assert got_set == want, (rows, max_pairs, max_rounds)
 
 
 def _clc(spark, rows, cons, **kw):

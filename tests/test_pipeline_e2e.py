@@ -5,16 +5,20 @@ F1 >= 0.99; extraction byte-identity per url; checkpoint resume."""
 import pytest
 from pyspark.sql import functions as F
 
-from bayesianrecordlinkage_jl_spark.plans.pipeline import (
-    LinkageConfig,
-    pairwise_f1,
-    run_linkage,
-)
-from bayesianrecordlinkage_jl_spark.sources.pages import (
-    extract_text,
-    generate_pages,
-    labeled_pairs,
-)
+from bayesianrecordlinkage_jl_spark.functions.text import phash
+from bayesianrecordlinkage_jl_spark.operators.incremental import cluster_pair_metrics
+from bayesianrecordlinkage_jl_spark.plans.pipeline import LinkageConfig, run_linkage
+from bayesianrecordlinkage_jl_spark.sources.pages import extract_text, generate_pages
+
+
+def pair_f1(clusters, pages) -> dict:
+    """Pairwise precision/recall/F1 of the predicted clusters vs the
+    planted cluster_id (contingency-table form, no pair materialization)."""
+    truth = pages.select(phash(F.col("url")).alias("node"), "cluster_id")
+    return cluster_pair_metrics(
+        clusters.select("node", "cluster_id"), truth,
+        pred_col="cluster_id", truth_col="cluster_id",
+    ).collect()[0].asDict()
 
 
 @pytest.fixture(scope="module")
@@ -56,9 +60,8 @@ def test_zipfian_hosts(pages):
 
 
 def test_pipeline_f1(spark, pages):
-    truth = labeled_pairs(pages)
     res = run_linkage(spark, pages.drop("cluster_id", "host"), LinkageConfig())
-    stats = pairwise_f1(res.clusters, truth)
+    stats = pair_f1(res.clusters, pages)
     assert stats["f1"] >= 0.99, stats
     # one-to-one invariant on the links artifact
     from bayesianrecordlinkage_jl_spark.operators.assignment import assert_one_to_one
@@ -153,9 +156,8 @@ def test_pipeline_f1_at_5x_scale(spark):
     sf0.1 corpus): F1 target and the one-to-one invariant must hold
     unchanged — no knob retuning with scale."""
     pages = generate_pages(spark, n_clusters=2000, seed=7).cache()
-    truth = labeled_pairs(pages)
     res = run_linkage(spark, pages.drop("cluster_id", "host"), LinkageConfig())
-    stats = pairwise_f1(res.clusters, truth)
+    stats = pair_f1(res.clusters, pages)
     assert stats["f1"] >= 0.99, stats
     from bayesianrecordlinkage_jl_spark.operators.assignment import assert_one_to_one
 
@@ -188,12 +190,11 @@ def test_pipeline_exact_posterior_method(spark, pages):
     pipeline F1 and the one-to-one invariant."""
     from bayesianrecordlinkage_jl_spark.operators.assignment import assert_one_to_one
 
-    truth = labeled_pairs(pages)
     res = run_linkage(
         spark,
         pages.drop("cluster_id", "host"),
         LinkageConfig(method="exact_posterior"),
     )
-    stats = pairwise_f1(res.clusters, truth)
+    stats = pair_f1(res.clusters, pages)
     assert stats["f1"] >= 0.99, stats
     assert assert_one_to_one(res.links)

@@ -54,7 +54,6 @@ def test_two_source_linkage_f1(spark, records):
         NLEVELS,
         id_col="rec_id",
         penalty=0.0,
-        use_em=True,
         method="hungarian",
     )
     got = links.select("rid_a", "rid_b").toPandas()

@@ -4,6 +4,7 @@ watermarked windowed stats (complete-mode memory sink)."""
 
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +12,20 @@ from pyspark.sql import functions as F
 from bayesianrecordlinkage_jl_spark.functions import text as T
 from bayesianrecordlinkage_jl_spark.sources.pages import generate_pages
 from bayesianrecordlinkage_jl_spark.streaming import ingest
+
+
+def _await_drained(q, timeout=120):
+    """Wait until an availableNow query has committed all its input, then
+    stop it. A stateful operator with a processing-time state timeout asks
+    for a no-data batch on every trigger, so such a query never terminates
+    on its own: the first no-data batch marks the input as drained."""
+    deadline = time.monotonic() + timeout
+    while q.isActive and time.monotonic() < deadline:
+        p = q.lastProgress
+        if p is not None and p["numInputRows"] == 0:
+            break
+        time.sleep(0.2)
+    q.stop()
 
 
 @pytest.fixture(scope="module")
@@ -114,7 +129,7 @@ def test_stateful_fingerprint_dedup(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q)
     got = spark.sql("SELECT * FROM fp_dedup")
     batch = spark.read.parquet(stream_dirs["in"]).withColumn(
         "fingerprint", doc_fingerprint(F.col("text")).cast("string")
@@ -298,7 +313,7 @@ def test_streaming_scd2_matches_batch_twin(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q)
     got = {
         (r["url"], r["version_no"], r["fp"], r["valid_from"])
         for r in spark.sql("SELECT * FROM page_versions").collect()
