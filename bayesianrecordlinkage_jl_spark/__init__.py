@@ -24,12 +24,11 @@ Reference entry points mirrored (see SURVEY.md section 2):
     samples, enumerated per small block)          -> operators.mcmc.exact_posterior_links
   - auction price recycling (update=true)         -> operators.assignment (auction_warm)
 
-Beyond the reference (training-data pipeline): operators.dedup
-(exact/MinHash-LSH/SimHash/Jaccard incl. LSH-verified scale path, all
-hot-bucket-salted), operators.similarity (brute force / multi-band
-sign-LSH / IVF ANN with both driver-sample and fully distributed
-trainers), operators.multimodal (stdlib PNG/WAV decode kernels),
-functions.text, streaming.ingest.
+Beyond the reference: operators.dedup (exact/MinHash-LSH/SimHash/Jaccard
+incl. LSH-verified scale path, all hot-bucket-salted),
+operators.similarity (brute force / multi-band sign-LSH / IVF ANN with
+both driver-sample and fully distributed trainers), functions.text,
+streaming.ingest.
 """
 
 __version__ = "0.3.0"

@@ -305,49 +305,6 @@ def doc_fingerprint_sql(text: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# PII detection / redaction (privacy scrub stage of a training-data pipeline)
-# ---------------------------------------------------------------------------
-# Patterns deliberately use only the regex subset with identical semantics
-# in Java regex (Spark) and RE2 (DuckDB): character classes, +, {n}, no
-# lookaround, no backreferences.
-
-PII_EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]+"
-PII_PHONE_RE = "555-[0-9]{4}"
-
-
-def pii_email_count(c: Column) -> Column:
-    return F.regexp_count(c, F.lit(PII_EMAIL_RE)).cast("int")
-
-
-def pii_email_count_sql(c: str) -> str:
-    return f"CAST(len(regexp_extract_all({c}, '{PII_EMAIL_RE}')) AS INT)"
-
-
-def pii_phone_count(c: Column) -> Column:
-    return F.regexp_count(c, F.lit(PII_PHONE_RE)).cast("int")
-
-
-def pii_phone_count_sql(c: str) -> str:
-    return f"CAST(len(regexp_extract_all({c}, '{PII_PHONE_RE}')) AS INT)"
-
-
-def pii_redact(c: Column) -> Column:
-    """Emails then phones masked with typed placeholder tokens (all
-    occurrences; the email pass runs first in BOTH engines so the output
-    is engine-independent even where patterns could overlap)."""
-    return F.regexp_replace(
-        F.regexp_replace(c, PII_EMAIL_RE, "<EMAIL>"), PII_PHONE_RE, "<PHONE>"
-    )
-
-
-def pii_redact_sql(c: str) -> str:
-    return (
-        f"regexp_replace(regexp_replace({c}, '{PII_EMAIL_RE}', '<EMAIL>', 'g'), "
-        f"'{PII_PHONE_RE}', '<PHONE>', 'g')"
-    )
-
-
-# ---------------------------------------------------------------------------
 # phonetic key (simplified American Soundex, engine-portable variant)
 # ---------------------------------------------------------------------------
 

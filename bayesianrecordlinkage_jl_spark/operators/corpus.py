@@ -8,11 +8,11 @@ web-scale LLM-data pipeline runs AFTER near-dup pair detection):
     the relational form of exact-substring dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): a span is
     duplicated iff its content hash occurs in at least one OTHER document.
-  - inverted_postings / conjunctive_search_topk: term->doc inverted index
-    and multi-query conjunctive (AND) search ranked by summed term
-    frequency; bm25_topk adds the standard BM25 ranking on the same
-    postings (library-level: idf/avgdl are data-derived and log-based, so
-    it is pytest-validated rather than oracle-checked).
+  - hash splits, repetition statistics, benchmark and train/test
+    decontamination, per-source frequency caps, sequence packing and the
+    curation pipeline that chains them; longest duplicated span, the
+    exact-substring rewrite, per-group language profile and exact
+    quantiles.
 
 Reference analog: none (BayesianRecordLinkage.jl stops at entity
 clusters); these compose the repo's own LSH/CC machinery
@@ -27,9 +27,6 @@ Scale notes (100 TB):
     per-key fan-out of the docs-per-gram join is bounded by document
     frequency, with the hot side pre-aggregated to one row per
     (gram, doc) — no quadratic blowup on boilerplate.
-  - search: postings are filtered to the literal query vocabulary
-    MAP-SIDE (right after the explode, before any shuffle), so the ranked
-    window only ever sees docs matching at least one term.
 """
 
 from __future__ import annotations
@@ -480,183 +477,6 @@ def contamination_flags_sql(
 
 
 # ---------------------------------------------------------------------------
-# inverted index + conjunctive search
-# ---------------------------------------------------------------------------
-
-
-def inverted_postings(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """-> (term, doc_id, tf bigint): the term->document inverted index."""
-    return (
-        _spread(df, id_col)
-        .select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.explode(T.tokens(F.col(text_col))).alias("term"),
-        )
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-
-
-def conjunctive_search_topk(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    queries: dict[int, tuple[str, ...]],
-    k: int = 10,
-) -> DataFrame:
-    """-> (query_id int, doc_id, score bigint, rank int): for each query,
-    the top-k documents containing ALL its terms, ranked by summed term
-    frequency (ties to the smaller doc_id — total order).
-
-    The literal query table (query_id, term, n_terms) is broadcast onto
-    the postings; postings themselves are filtered to the union query
-    vocabulary map-side, before any shuffle, so the per-query window sees
-    only matching docs (bounded by document frequency, not corpus size)."""
-    spark = df.sparkSession
-    rows = [
-        (int(qid), t, len(set(terms)))
-        for qid, terms in sorted(queries.items())
-        for t in sorted(set(terms))
-    ]
-    qdf = spark.createDataFrame(
-        rows, schema="query_id int, term string, n_terms int"
-    )
-    vocab = sorted({t for terms in queries.values() for t in terms})
-    postings = inverted_postings(df, id_col, text_col).where(
-        F.col("term").isin(vocab)
-    )
-    matched = (
-        postings.join(F.broadcast(qdf), on="term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("_nmatch"),
-            F.first("n_terms").alias("_need"),  # unique per query_id
-            F.sum("tf").cast("long").alias("score"),
-        )
-        .where(F.col("_nmatch") == F.col("_need"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
-
-
-def conjunctive_search_topk_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    queries: dict[int, tuple[str, ...]],
-    k: int = 10,
-) -> str:
-    vals = ", ".join(
-        f"({int(qid)}, '{t}', {len(set(terms))})"
-        for qid, terms in sorted(queries.items())
-        for t in sorted(set(terms))
-    )
-    return f"""
-    WITH q(query_id, term, n_terms) AS (VALUES {vals}),
-    postings AS (
-      SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM (
-        SELECT CAST({id_col} AS BIGINT) AS doc_id,
-               unnest({T.tokens_sql(text_col)}) AS term FROM {table}
-      ) WHERE term IN (SELECT term FROM q) GROUP BY term, doc_id
-    ),
-    matched AS (
-      SELECT q.query_id, p.doc_id, CAST(sum(p.tf) AS BIGINT) AS score
-      FROM postings p JOIN q USING (term)
-      GROUP BY q.query_id, p.doc_id, q.n_terms
-      HAVING count(*) = q.n_terms
-    )
-    SELECT query_id, doc_id, score, rank FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY score DESC, doc_id ASC) AS INT) AS rank
-      FROM matched
-    ) WHERE rank <= {k}
-    """
-
-
-def bm25_topk(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    queries: dict[int, tuple[str, ...]],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25-ranked disjunctive (OR) search: (query_id, doc_id, score
-    double, rank int). idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (the
-    Lucene/ATIRE non-negative form), length-normalized tf saturation with
-    the standard (k1, b).
-
-    N and avgdl are single scalar aggregates (two tiny jobs); df comes
-    from one postings aggregate and rides the broadcast query join.
-    Library-level only: the score is log-based and corpus-derived, so it
-    is validated by pytest against a driver-side numpy replica rather
-    than a static DuckDB oracle (repo invariant: no exp/log in
-    oracle-checked columns)."""
-    spark = df.sparkSession
-    rows = [
-        (int(qid), t)
-        for qid, terms in sorted(queries.items())
-        for t in sorted(set(terms))
-    ]
-    qdf = spark.createDataFrame(rows, schema="query_id int, term string")
-    vocab = sorted({t for terms in queries.values() for t in terms})
-
-    stats = df.select(
-        F.count(F.lit(1)).alias("_n"),
-        F.avg(T.token_count(F.col(text_col))).alias("_avgdl"),
-    ).collect()[0]
-    n_docs, avgdl = int(stats["_n"]), float(stats["_avgdl"])
-
-    dl = _spread(df, id_col).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        T.token_count(F.col(text_col)).alias("_dl"),
-    )
-    postings = inverted_postings(df, id_col, text_col).where(
-        F.col("term").isin(vocab)
-    )
-    dfreq = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("_df")
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("_df") + F.lit(0.5))
-        / (F.col("_df") + F.lit(0.5))
-    )
-    tf_norm = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
-        F.col("tf").cast("double")
-        + F.lit(k1)
-        * (
-            F.lit(1.0 - b)
-            + F.lit(b) * F.col("_dl").cast("double") / F.lit(avgdl)
-        )
-    )
-    scored = (
-        postings.join(F.broadcast(qdf), on="term")
-        .join(F.broadcast(dfreq), on="term")
-        .join(dl, on="doc_id")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(idf * tf_norm).alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
 # per-key frequency capping (domain cap)
 # ---------------------------------------------------------------------------
 
@@ -986,236 +806,6 @@ def curation_pipeline_sql(
 
 
 # ---------------------------------------------------------------------------
-# hashed linear quality classifier (fastText/CCNet-style model gate)
-# ---------------------------------------------------------------------------
-
-QC_BUCKETS = 256
-
-
-def classifier_weights(n_buckets: int = QC_BUCKETS, seed: str = "qw") -> list[int]:
-    """Frozen integer weights in [-8, 8], one per hash bucket, derived
-    once from md5 of the bucket index.  The same Python constants feed
-    both emitters (the MinHash affine-constant pattern), so the "model"
-    is static — never trained at query time (oracle-staticity invariant).
-    At production scale the ints would come from an offline fastText /
-    logistic fit quantized to this grid; the serving plan is identical."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"{seed}:{i}".encode()).hexdigest()[:15], 16) % 17 - 8
-        for i in range(n_buckets)
-    ]
-
-
-_QC_TOKENS = "filter(split(lower({c}), '[^a-z0-9]+'), t -> t != '')"
-_QC_HASH = "CAST(conv(substring(md5(t),1,15),16,10) AS BIGINT)"
-
-
-def quality_classifier(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_buckets: int = QC_BUCKETS,
-    seed: str = "qw",
-) -> DataFrame:
-    """-> (doc_id, n_tokens bigint, raw_score bigint, cls_score double,
-    keep boolean): a hashed-bag-of-words linear classifier score per
-    document — the model-based quality gate (fastText/CCNet-style) that
-    complements the heuristic quality_score.
-
-    Token bucket = shared 60-bit md5 hash mod n_buckets; raw_score is the
-    INTEGER sum of frozen per-bucket weights over all tokens (tf
-    weighting; integer addition commutes, so the score is partitioning-
-    invariant with no fold-order pinning needed).  cls_score normalizes
-    by 8*n_tokens in ONE final division (exactly rounded, bit-identical
-    across engines).  keep = raw_score >= 0.
-
-    100 TB: pure per-row Catalyst (aggregate over the token array with an
-    element_at into a 256-int literal array — one server-parsed expr
-    string, no py4j literal loop, no shuffle, no Python)."""
-    w = classifier_weights(n_buckets, seed)
-    arr = f"array({','.join(str(x) for x in w)})"
-    toks = _QC_TOKENS.format(c=text_col)
-    raw = (
-        f"coalesce(aggregate({toks}, CAST(0 AS BIGINT), (acc, t) -> acc + "
-        f"element_at({arr}, CAST(({_QC_HASH} % {n_buckets}) AS INT) + 1)), "
-        f"CAST(0 AS BIGINT))"
-    )
-    ntok = f"CAST(size({toks}) AS BIGINT)"
-    return _spread(df, id_col).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.expr(ntok).alias("n_tokens"),
-        F.expr(raw).alias("raw_score"),
-        F.expr(
-            f"CAST(({raw}) AS DOUBLE) / "
-            f"CAST(8 * greatest({ntok}, 1) AS DOUBLE)"
-        ).alias("cls_score"),
-        F.expr(f"({raw}) >= 0").alias("keep"),
-    )
-
-
-def quality_classifier_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    n_buckets: int = QC_BUCKETS,
-    seed: str = "qw",
-) -> str:
-    w = classifier_weights(n_buckets, seed)
-    lst = f"[{','.join(str(x) for x in w)}]"
-    toks = T.tokens_sql(text_col)
-    h = T.phash_sql("t")
-    raw = (
-        f"coalesce(list_aggregate(list_transform({toks}, "
-        f"t -> ({lst})[CAST(({h} % {n_buckets}) AS INT) + 1]), 'sum'), 0)"
-    )
-    ntok = f"CAST(len({toks}) AS BIGINT)"
-    return f"""
-    SELECT CAST({id_col} AS BIGINT) AS doc_id,
-           {ntok} AS n_tokens,
-           CAST({raw} AS BIGINT) AS raw_score,
-           CAST({raw} AS DOUBLE) / CAST(8 * greatest({ntok}, 1) AS DOUBLE)
-             AS cls_score,
-           ({raw}) >= 0 AS keep
-    FROM {table}
-    """
-
-
-# ---------------------------------------------------------------------------
-# data-mixture sampling / epoch upsampling (DoReMi-style source reweighting)
-# ---------------------------------------------------------------------------
-
-_MIX_DENOM = 4096
-
-
-def mixture_sample(
-    df: DataFrame,
-    id_col: str,
-    source_col: str,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-    salt: str = "mix",
-) -> DataFrame:
-    """-> (doc_id, source, epoch int), one output row per training COPY of
-    a document under per-source mixture rates (epochs).  rate 2.5 emits 2
-    guaranteed copies plus a third for a deterministic 50% of ids; rate
-    0.25 keeps 25% of docs; rate 0 drops the source.
-
-    The fractional part is resolved by the shared 60-bit hash of
-    (salt:id) against rate*4096 — integer-only, so assignment is stable
-    across runs, partitionings, engines, and corpus growth (adding docs
-    never flips an existing id's copy count).
-
-    100 TB: a per-row CASE + bounded explode — no shuffle, no state; the
-    natural way to materialize a DoReMi/epoch-weighted mixture as a flat
-    training corpus."""
-    r4096 = {s: int(round(r * _MIX_DENOM)) for s, r in rates.items()}
-    dflt = int(round(default_rate * _MIX_DENOM))
-    rate = None
-    for s, r in sorted(r4096.items()):
-        cond = F.col(source_col) == s
-        rate = F.when(cond, F.lit(r)) if rate is None else rate.when(cond, F.lit(r))
-    rate = F.lit(dflt) if rate is None else rate.otherwise(F.lit(dflt))
-    bucket = (
-        T.phash(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-        % _MIX_DENOM
-    )
-    n_copies = (rate / F.lit(_MIX_DENOM)).cast("int") + F.when(
-        bucket < rate % _MIX_DENOM, F.lit(1)
-    ).otherwise(F.lit(0))
-    return (
-        _spread(df, id_col)
-        .select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(source_col).alias("source"),
-            n_copies.alias("_n"),
-        )
-        .where(F.col("_n") > 0)
-        .select(
-            "doc_id",
-            "source",
-            F.explode(F.sequence(F.lit(0), F.col("_n") - 1)).alias("_e"),
-        )
-        .select("doc_id", "source", F.col("_e").cast("int").alias("epoch"))
-    )
-
-
-def mixture_sample_sql(
-    table: str,
-    id_col: str,
-    source_col: str,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-    salt: str = "mix",
-) -> str:
-    r4096 = {s: int(round(r * _MIX_DENOM)) for s, r in rates.items()}
-    dflt = int(round(default_rate * _MIX_DENOM))
-    cases = " ".join(
-        f"WHEN {source_col} = '{s}' THEN {r}" for s, r in sorted(r4096.items())
-    )
-    rate = f"(CASE {cases} ELSE {dflt} END)" if cases else str(dflt)
-    bucket = T.phash_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)") + f" % {_MIX_DENOM}"
-    n = f"(CAST({rate} // {_MIX_DENOM} AS INT) + CASE WHEN ({bucket}) < {rate} % {_MIX_DENOM} THEN 1 ELSE 0 END)"
-    return f"""
-    SELECT doc_id, source, CAST(unnest(range(_n)) AS INT) AS epoch
-    FROM (
-      SELECT CAST({id_col} AS BIGINT) AS doc_id, {source_col} AS source,
-             {n} AS _n
-      FROM {table}
-    ) WHERE _n > 0
-    """
-
-
-# ---------------------------------------------------------------------------
-# vocabulary builder (tokenizer-training prep)
-# ---------------------------------------------------------------------------
-
-
-def vocabulary_topk(
-    df: DataFrame, id_col: str, text_col: str, k: int = 100
-) -> DataFrame:
-    """-> (term, tf bigint, df bigint, rank int): the top-k corpus
-    vocabulary by total term frequency (ties to the lexicographically
-    smaller term — total order), with document frequency alongside — the
-    aggregation a BPE/WordPiece tokenizer-training pass starts from.
-
-    Scale shape: reuses the inverted-postings aggregate (shuffle keyed by
-    near-uniform terms, partial map-side combine); the global top-k is
-    TakeOrderedAndProject (per-partition partial top-k merged on the
-    driver, never a full sort); the rank window runs on k rows only."""
-    stats = (
-        inverted_postings(df, id_col, text_col)
-        .groupBy("term")
-        .agg(
-            F.sum("tf").cast("long").alias("tf"),
-            F.count(F.lit(1)).cast("long").alias("df"),
-        )
-    )
-    topk = stats.orderBy(F.desc("tf"), F.asc("term")).limit(k)
-    w = Window.orderBy(F.desc("tf"), F.asc("term"))
-    return topk.withColumn("rank", F.row_number().over(w).cast("int"))
-
-
-def vocabulary_topk_sql(
-    table: str, id_col: str, text_col: str, k: int = 100
-) -> str:
-    return f"""
-    SELECT term, tf, df, CAST(row_number() OVER
-             (ORDER BY tf DESC, term ASC) AS INT) AS rank
-    FROM (
-      SELECT term, CAST(sum(tf) AS BIGINT) AS tf,
-             CAST(count(*) AS BIGINT) AS df
-      FROM (
-        SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM (
-          SELECT CAST({id_col} AS BIGINT) AS doc_id,
-                 unnest({T.tokens_sql(text_col)}) AS term FROM {table}
-        ) GROUP BY term, doc_id
-      ) GROUP BY term
-    ) ORDER BY tf DESC, term ASC LIMIT {k}
-    """
-
-
-# ---------------------------------------------------------------------------
 # train/test split decontamination (leakage check across hash splits)
 # ---------------------------------------------------------------------------
 
@@ -1267,141 +857,6 @@ def split_decontamination_sql(
         k=k, min_hits=min_hits,
         corpus_filter=f"({case}) = '{train}'",
     )
-
-# ---------------------------------------------------------------------------
-# boilerplate / repeated-paragraph strip (CCNet-style paragraph dedup)
-# ---------------------------------------------------------------------------
-
-BP_CHUNK_K = 8   # words per non-overlapping chunk ("paragraph" proxy)
-BP_MIN_DOCS = 2  # chunk duplicated iff seen in >= this many distinct docs
-
-
-def boilerplate_strip(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = BP_CHUNK_K,
-    min_docs: int = BP_MIN_DOCS,
-) -> DataFrame:
-    """-> (doc_id, n_chunks bigint, dup_chunks bigint, dup_frac double,
-    clean_text string): the removal TRANSFORMATION on top of span
-    detection — CCNet-style paragraph dedup (Wenzek et al. 2020 dedup
-    normalized paragraphs corpus-wide; the fixture text has no newlines,
-    so the paragraph proxy is non-overlapping k-word chunks of the
-    normalized token stream). A chunk is boilerplate iff its content hash
-    occurs in >= `min_docs` DISTINCT documents; `clean_text` is the
-    surviving chunks re-joined in document order (normalized tokens — the
-    contract is normalized-text output, like CCNet's dedup unit).
-
-    Scale shape: tokenize/chunk/hash runs once per document behind the
-    unique-key aggregate barrier (duplicated_span_stats pattern); the
-    exploded (chunk, doc) table is localCheckpoint'ed because it is
-    consumed twice (document-frequency aggregate + flag join). Shuffles
-    key on the 60-bit chunk hash (near-uniform) and on doc_id for the
-    reassembly; the reassembly list is bounded by document length.
-    Determinism: collect_list order is partition-dependent, so chunks are
-    collected as (idx, chunk) structs and array_sort'ed (idx is unique
-    per document) before joining."""
-    chunks_expr = F.expr(
-        f"transform(sequence(1, greatest((size(_t) + {k - 1}) div {k}, 1)), "
-        f"i -> array_join(slice(_t, (i - 1) * {k} + 1, {k}), ' '))"
-    )
-    hashed = (
-        _spread(df, id_col)
-        .select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            T.tokens(F.col(text_col)).alias("_t"),
-        )
-        .groupBy("doc_id")
-        .agg(F.first("_t").alias("_t"))
-        .select("doc_id", chunks_expr.alias("_ch"))
-    )
-    ex = (
-        hashed.select("doc_id", F.posexplode("_ch").alias("_i0", "chunk"))
-        .select(
-            "doc_id",
-            (F.col("_i0") + 1).cast("int").alias("idx"),
-            "chunk",
-            T.phash(F.col("chunk")).alias("h"),
-        )
-        .localCheckpoint()
-    )
-    dup = (
-        ex.select("h", "doc_id")
-        .distinct()
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("_ndocs"))
-        .where(F.col("_ndocs") >= min_docs)
-        .select("h", F.lit(1).alias("_dup"))
-    )
-    flagged = ex.join(dup, on="h", how="left")
-    is_dup = F.col("_dup").isNotNull()
-    return flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.sum(F.when(is_dup, 1).otherwise(0)).cast("long").alias("dup_chunks"),
-        (
-            F.sum(F.when(is_dup, 1).otherwise(0)).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("dup_frac"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~is_dup,
-                            F.struct(
-                                F.col("idx").alias("i"),
-                                F.col("chunk").alias("c"),
-                            ),
-                        )
-                    )
-                ),
-                lambda s: s["c"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-
-
-def boilerplate_strip_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    k: int = BP_CHUNK_K,
-    min_docs: int = BP_MIN_DOCS,
-) -> str:
-    toks = T.tokens_sql(text_col)
-    return f"""
-    WITH hashed AS MATERIALIZED (
-      SELECT doc_id,
-             list_transform(
-               generate_series(1, greatest((len(_t) + {k - 1}) // {k}, 1)),
-               i -> array_to_string(
-                      list_slice(_t, (i - 1) * {k} + 1, (i - 1) * {k} + {k}),
-                      ' ')) AS _ch
-      FROM (SELECT CAST({id_col} AS BIGINT) AS doc_id, {toks} AS _t
-            FROM {table})
-    ),
-    ex AS MATERIALIZED (
-      SELECT doc_id, CAST(i AS INT) AS idx, _ch[i] AS chunk,
-             {T.phash_sql('_ch[i]')} AS h
-      FROM hashed, unnest(range(1, len(_ch) + 1)) AS u(i)
-    ),
-    dup AS (
-      SELECT h FROM (SELECT DISTINCT h, doc_id FROM ex)
-      GROUP BY h HAVING count(*) >= {min_docs}
-    )
-    SELECT ex.doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-           CAST(sum(CASE WHEN dup.h IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS dup_chunks,
-           CAST(CAST(sum(CASE WHEN dup.h IS NOT NULL THEN 1 ELSE 0 END)
-                     AS BIGINT) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE) AS dup_frac,
-           coalesce(string_agg(CASE WHEN dup.h IS NULL THEN ex.chunk END,
-                               ' ' ORDER BY ex.idx), '') AS clean_text
-    FROM ex LEFT JOIN dup ON ex.h = dup.h
-    GROUP BY ex.doc_id
-    """
 
 # ---------------------------------------------------------------------------
 # longest duplicated span (gaps-and-islands over duplicated shingle runs)
@@ -1601,79 +1056,6 @@ def group_language_profile_sql(
            CAST(_sumsq AS DOUBLE)
              / CAST(n_docs * n_docs AS DOUBLE) AS simpson
     FROM agg JOIN top ON agg.grp = top.grp
-    """
-
-# ---------------------------------------------------------------------------
-# per-source token-budget selection (quality-ranked prefix under budget)
-# ---------------------------------------------------------------------------
-
-
-def token_budget_select(
-    scored: DataFrame,
-    budget_tokens: int,
-    source_col: str = "source",
-    score_col: str = "raw_score",
-    tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """scored(doc_id, source, raw_score, n_tokens, ...) -> the selected
-    rows (doc_id, source, raw_score, n_tokens, sel_rank int, cum_tokens
-    bigint): per source, documents ranked by quality (score desc, id asc
-    — total order) and kept while the RUNNING token total stays within
-    `budget_tokens` — the "best data first, cut at the compute budget"
-    curriculum-selection step (the data-constrained-scaling recipe:
-    rank by a quality model, take the top slice that fits the token
-    budget). Take-while semantics: selection is the maximal quality-
-    ranked PREFIX whose cumulative tokens <= budget (a later smaller doc
-    does NOT backfill — keeps the rule window-expressible and the output
-    a deterministic function of the ranking).
-
-    Scale shape: ONE window per source (rank + running sum share the
-    same (source, score desc, id) sort — Catalyst evaluates both in a
-    single Window node); per-partition work is bounded by docs-per-source.
-    The budget filter cannot use WindowGroupLimit (the cut depends on the
-    running SUM, not a row count), so the per-source sort is the honest
-    cost — at 100 TB, sources are the natural partition unit and the sort
-    is per-source, never global."""
-    w = (
-        Window.partitionBy(source_col)
-        .orderBy(F.desc(score_col), F.asc(id_col))
-    )
-    return (
-        scored.select(
-            id_col, source_col, score_col, tokens_col,
-            F.row_number().over(w).cast("int").alias("sel_rank"),
-            F.sum(tokens_col)
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("long")
-            .alias("cum_tokens"),
-        )
-        .where(F.col("cum_tokens") <= budget_tokens)
-    )
-
-
-def token_budget_select_sql(
-    scored_expr: str,
-    budget_tokens: int,
-    source_col: str = "source",
-    score_col: str = "raw_score",
-    tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-) -> str:
-    order = f"{score_col} DESC, {id_col} ASC"
-    return f"""
-    SELECT {id_col}, {source_col}, {score_col}, {tokens_col},
-           sel_rank, cum_tokens
-    FROM (
-      SELECT {id_col}, {source_col}, {score_col}, {tokens_col},
-             CAST(row_number() OVER (PARTITION BY {source_col}
-                                     ORDER BY {order}) AS INT) AS sel_rank,
-             CAST(sum({tokens_col}) OVER (
-                    PARTITION BY {source_col} ORDER BY {order}
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS cum_tokens
-      FROM {scored_expr}
-    ) WHERE cum_tokens <= {budget_tokens}
     """
 
 
@@ -1937,959 +1319,4 @@ def span_rewrite_sql(
              AS n_removed,
            coalesce(r.new_text, '') AS new_text
     FROM srh h LEFT JOIN srebuilt r USING (doc_id)
-    """
-
-
-# ---------------------------------------------------------------------------
-# Frozen character-n-gram LM scoring (CCNet-style perplexity-proxy filter)
-# ---------------------------------------------------------------------------
-
-
-def train_ngram_lm(
-    df: DataFrame,
-    text_col: str,
-    top_n: int = 256,
-    scale: int = 100,
-) -> dict:
-    """Train the frozen char-trigram LM the quality filter scores with —
-    the CCNet recipe (Wenzek et al. 2020: language-model perplexity as a
-    web-corpus quality signal), reduced to a character n-gram table so
-    scoring needs no external LM and stays engine-portable.
-
-    Counts every char trigram in the corpus (one explode + count — the
-    same distributed shape as vocabulary_topk), keeps the top_n by
-    (count DESC, trigram ASC), and quantizes each log-probability to an
-    integer: score(t) = floor(scale * ln(count_t / total) + 0.5). Unseen
-    trigrams get backoff = min(score) - scale (one decade below the
-    rarest kept entry). INTEGER scores are the point: document totals
-    become plain BIGINT sums — partitioning-order independent and
-    bit-strict across engines (the repo's integer-state rule; ln runs at
-    TRAIN time only, never in oracle-checked columns).
-
-    Only trigrams over the safe charset [a-z0-9 ] are kept, so the frozen
-    table embeds in both engines' SQL literals without escaping
-    divergence. Frozen to plans/ngram_lm.json by
-    scripts/freeze_ngram_lm.py (the freeze-don't-train-at-query-time
-    rule)."""
-    import math
-    import re
-
-    tri = df.select(
-        F.explode(
-            F.expr(
-                f"CASE WHEN length({text_col}) < 3 THEN array() "
-                f"ELSE transform(sequence(1, length({text_col}) - 2), "
-                f"i -> substring({text_col}, i, 3)) END"
-            )
-        ).alias("t")
-    )
-    counts = (
-        tri.groupBy("t").count()
-        .orderBy(F.desc("count"), F.asc("t"))
-        .limit(top_n * 2)  # headroom for charset-filtered entries
-        .collect()
-    )
-    total = tri.count()
-    safe = re.compile(r"^[a-z0-9 ]{3}$")
-    scores: dict[str, int] = {}
-    for r in counts:
-        if len(scores) >= top_n:
-            break
-        if safe.match(r["t"]):
-            scores[r["t"]] = int(
-                math.floor(scale * math.log(r["count"] / total) + 0.5)
-            )
-    if not scores:
-        raise ValueError(
-            "train_ngram_lm: no trigrams over the safe charset [a-z0-9 ] "
-            "survived filtering — the corpus cannot fit this model "
-            "(non-ASCII or too-short texts); supply a charset-compatible "
-            "corpus or widen top_n"
-        )
-    backoff = min(scores.values()) - scale
-    return {"n": 3, "scale": scale, "backoff": backoff, "scores": scores}
-
-
-def ngram_lm_kernel(model: dict):
-    """Arrow-batched scorer twin of the expression form — a dict lookup
-    per trigram (exact integer sums, so parity with the map-literal /
-    CASE forms is trivial). The hot path: the 256-entry map literal
-    inside an aggregate lambda runs as an interpreted HigherOrderFunction
-    per trigram on the JVM, while the kernel scans a batch of documents
-    in one Python pass over a hash map."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    scores = dict(model["scores"])
-    backoff = int(model["backoff"])
-
-    @pandas_udf("struct<n_tri: bigint, lm_score: bigint>")
-    def _score(texts):
-        ns, tots = [], []
-        for t in texts:
-            t = t or ""
-            n = max(len(t) - 2, 0)
-            acc = 0
-            for i in range(n):
-                acc += scores.get(t[i : i + 3], backoff)
-            ns.append(n)
-            tots.append(acc)
-        return pd.DataFrame({"n_tri": ns, "lm_score": tots})
-
-    return _score
-
-
-def ngram_lm_scores(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    model: dict,
-    impl: str = "arrow",
-) -> DataFrame:
-    """-> (doc_id, n_tri, lm_score, avg_score): per-document frozen-LM
-    quality signal — lm_score = sum of quantized trigram log-probs
-    (BIGINT, exact), n_tri = trigram count, avg_score = lm_score/n_tri as
-    one double division (the per-trigram log-prob, the CCNet
-    perplexity-proxy; higher = more in-distribution text; NULL when the
-    text is shorter than a trigram). Map-side only — no shuffle, no join:
-    the model rides in the plan (kernel closure or map literal), which is
-    what makes this a single-scan filter at 100 TB.
-
-    impl: "arrow" (default) = ngram_lm_kernel batch scorer; "expr" = the
-    pure-Catalyst twin (map-literal lookup inside an aggregate lambda) —
-    identical integers by construction, asserted in test_corpus."""
-    if impl == "arrow":
-        kern = ngram_lm_kernel(model)
-        scored = df.select(
-            F.col(id_col).alias("doc_id"), kern(F.col(text_col)).alias("_s")
-        ).select("doc_id", "_s.n_tri", "_s.lm_score")
-    else:
-        entries = ", ".join(
-            f"'{t}', {s}L" for t, s in sorted(model["scores"].items())
-        )
-        backoff = int(model["backoff"])
-        tri = (
-            f"CASE WHEN length({text_col}) < 3 THEN array() "
-            f"ELSE transform(sequence(1, length({text_col}) - 2), "
-            f"i -> substring({text_col}, i, 3)) END"
-        )
-        scored = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.expr(
-                f"CAST(greatest(length({text_col}) - 2, 0) AS BIGINT)"
-            ).alias("n_tri"),
-            F.expr(
-                f"aggregate({tri}, CAST(0 AS BIGINT), (acc, t) -> "
-                f"acc + coalesce(element_at(map({entries}), t), {backoff}L))"
-            ).alias("lm_score"),
-        )
-    return scored.select(
-        "doc_id",
-        "n_tri",
-        "lm_score",
-        F.when(
-            F.col("n_tri") > 0,
-            F.col("lm_score").cast("double") / F.col("n_tri").cast("double"),
-        ).alias("avg_score"),
-    )
-
-
-def ngram_lm_scores_sql(table: str, id_col: str, text_col: str, model: dict) -> str:
-    """DuckDB twin: trigrams unnested and LEFT-JOINed against the frozen
-    table as a VALUES relation (a 256-branch simple-CASE per trigram was
-    measured 6x slower at sf0.1 — the SQL mirror of the hash-once
-    lesson). INTEGER scores make the group-sum partitioning/order
-    independent, so the join form is value-identical to a sequential
-    lookup; avg_score stays the one double division."""
-    vals = ", ".join(
-        f"('{t}', {s})" for t, s in sorted(model["scores"].items())
-    )
-    backoff = int(model["backoff"])
-    return f"""
-    WITH st(t, s) AS (VALUES {vals}),
-    base AS (SELECT {id_col} AS doc_id, {text_col} AS _txt FROM {table}),
-    tri AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, greatest(len(_txt) - 2, 0) + 1),
-                                   i -> substring(_txt, i, 3))) AS t
-      FROM base
-    ),
-    agg AS (
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tri,
-             CAST(sum(coalesce(st.s, {backoff})) AS BIGINT) AS lm_score
-      FROM tri LEFT JOIN st USING (t)
-      GROUP BY doc_id
-    )
-    SELECT b.doc_id, coalesce(a.n_tri, 0) AS n_tri,
-           coalesce(a.lm_score, 0) AS lm_score,
-           CASE WHEN coalesce(a.n_tri, 0) > 0
-                THEN CAST(a.lm_score AS DOUBLE) / CAST(a.n_tri AS DOUBLE)
-           END AS avg_score
-    FROM base b LEFT JOIN agg a USING (doc_id)
-    """
-
-
-# ---------------------------------------------------------------------------
-# BPE merge training (distributed tokenizer-training pass)
-# ---------------------------------------------------------------------------
-
-BPE_ROUNDS = 8
-
-
-def _bpe_seed_vocab(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """-> (tok, cnt, seg): the weighted type vocabulary with each token's
-    initial character segmentation. seg uses the DOUBLE-SPACE encoding:
-    symbols separated by two spaces, two-space padding at both ends, so a
-    merge is ONE plain (non-regex) replace of ' l  r ' with ' lr ' — the
-    single outer spaces consume one of each boundary pair, which makes
-    back-to-back occurrences ('a b a b' with merge a+b) NON-overlapping
-    for a leftmost-scan replace. Plain replace is the only string-rewrite
-    primitive with identical semantics in Spark and DuckDB (RE2 has no
-    lookarounds, so the classic '(?<!\\S)l r(?!\\S)' regex is not
-    portable)."""
-    toks = df.select(F.explode(T.tokens(F.col(text_col))).alias("tok"))
-    return toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("cnt")).select(
-        "tok",
-        "cnt",
-        F.concat(
-            F.lit("  "), F.expr("regexp_replace(tok, '(.)', '$1  ')")
-        ).alias("seg"),
-    )
-
-
-def bpe_train(
-    df: DataFrame, id_col: str, text_col: str, rounds: int = BPE_ROUNDS
-) -> DataFrame:
-    """-> (rank, left_sym, right_sym, merged, pair_count): the first
-    `rounds` byte-pair-encoding merges learned from the corpus (Sennrich,
-    Haddow & Birch 2016) — the tokenizer-training pass of a training-data
-    pipeline, run where the data lives instead of on a sampled shard.
-
-    Each round: adjacent-symbol pairs of every vocabulary type are counted
-    weighted by type frequency (integer sums — order-independent); the
-    argmax pair (count DESC, left ASC, right ASC — a total order, unlike
-    the hash-ordered dict of the reference implementation) becomes the
-    round's merge and is applied to every segmentation with the
-    double-space replace (_bpe_seed_vocab). Stops early if no pair is
-    left.
-
-    Scale shape: the corpus is touched ONCE (tokenize + type count — the
-    vocabulary_topk shuffle); every round then runs on the |types| table
-    only, which is what makes BPE trainable at 100 TB (types grow
-    sublinearly in corpus size). Per round: one map-side pair explode +
-    combined count, one 1-row TakeOrdered argmax to the driver (the
-    train_centroids_distributed precedent — merge literals are the
-    training artifact), one map-side replace; the vocab is checkpointed
-    per round so lineage stays flat."""
-    vocab = _bpe_seed_vocab(df, id_col, text_col).localCheckpoint()
-    merges: list[tuple] = []
-    for rnd in range(1, rounds + 1):
-        pairs = (
-            vocab.select("cnt", F.expr("split(trim(seg), '  ')").alias("arr"))
-            .select(
-                "cnt",
-                # sequence(1, 0) DESCENDS in Spark — guard short arrays
-                F.expr(
-                    "explode(CASE WHEN size(arr) < 2 THEN "
-                    "CAST(array() AS array<struct<l: string, r: string>>) "
-                    "ELSE transform(sequence(1, size(arr) - 1), "
-                    "i -> struct(element_at(arr, i) AS l, "
-                    "element_at(arr, i + 1) AS r)) END)"
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("cnt").cast("long").alias("c"))
-        )
-        top = pairs.orderBy(
-            F.desc("c"), F.asc("l"), F.asc("r")
-        ).limit(1).collect()
-        if not top:
-            break
-        l, r, c = top[0]["l"], top[0]["r"], top[0]["c"]
-        merges.append((rnd, l, r, l + r, c))
-        vocab = vocab.select(
-            "tok",
-            "cnt",
-            F.expr(
-                "replace(seg, ' ' || {l} || '  ' || {r} || ' ', "
-                "' ' || {l} || {r} || ' ')".format(
-                    l=f"'{l}'", r=f"'{r}'"
-                )
-            ).alias("seg"),
-        ).localCheckpoint()
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        merges,
-        "rank: int, left_sym: string, right_sym: string, "
-        "merged: string, pair_count: long",
-    )
-
-
-def bpe_train_sql(
-    table: str, id_col: str, text_col: str, rounds: int = BPE_ROUNDS
-) -> str:
-    """Chained-CTE DuckDB twin: v0 -> p1 -> m1 -> v1 -> ... with the same
-    double-space replace; merge scalars flow via scalar subqueries
-    (coalesced to a control char so an exhausted round leaves seg
-    unchanged instead of NULLing it)."""
-    ctes = [
-        f"""v0 AS MATERIALIZED (
-          SELECT tok, CAST(count(*) AS BIGINT) AS cnt,
-                 '  ' || regexp_replace(tok, '(.)', '\\1  ', 'g') AS seg
-          FROM (SELECT unnest({T.tokens_sql(text_col)}) AS tok FROM {table})
-          GROUP BY tok)"""
-    ]
-    for it in range(1, rounds + 1):
-        prev = f"v{it - 1}"
-        ctes.append(f"""p{it} AS (
-          SELECT arr[i] AS l, arr[i + 1] AS r, CAST(sum(cnt) AS BIGINT) AS c
-          FROM (SELECT cnt, str_split(trim(seg), '  ') AS arr FROM {prev}),
-               unnest(range(1, greatest(len(arr), 1))) AS u(i)
-          GROUP BY arr[i], arr[i + 1])""")
-        ctes.append(f"""m{it} AS MATERIALIZED (
-          SELECT l, r, c FROM p{it} ORDER BY c DESC, l ASC, r ASC LIMIT 1)""")
-        ctes.append(f"""v{it} AS MATERIALIZED (
-          SELECT tok, cnt,
-                 replace(seg,
-                         coalesce((SELECT ' ' || l || '  ' || r || ' ' FROM m{it}), chr(1)),
-                         coalesce((SELECT ' ' || l || r || ' ' FROM m{it}), chr(1))) AS seg
-          FROM {prev})""")
-    body = ",\n    ".join(ctes)
-    sel = "\n    UNION ALL ".join(
-        f"SELECT {it} AS rank, l AS left_sym, r AS right_sym, "
-        f"l || r AS merged, c AS pair_count FROM m{it}"
-        for it in range(1, rounds + 1)
-    )
-    return f"""WITH {body}
-    SELECT CAST(rank AS INT) AS rank, left_sym, right_sym, merged, pair_count
-    FROM ({sel}) ORDER BY rank
-    """
-
-
-def _bpe_apply_chain(sym_expr: str, merges: list[list[str]], engine: str) -> str:
-    """Nested-replace chain applying the frozen merge list in rank order
-    to a double-space segmentation expression — identical plain-replace
-    semantics in both engines (see _bpe_seed_vocab)."""
-    out = sym_expr
-    for l, r in merges:
-        out = f"replace({out}, ' {l}  {r} ', ' {l}{r} ')"
-    return out
-
-
-def bpe_segment_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[list[str]],
-) -> DataFrame:
-    """-> (doc_id, n_tokens, n_symbols, n_chars): per-document subword
-    budget under the FROZEN learned BPE vocabulary — n_symbols is what
-    the document costs a tokenizer trained by bpe_train (the
-    tokens-per-document signal curriculum/budget operators consume;
-    n_symbols/n_chars is the compression-ratio quality heuristic).
-
-    Map-side single scan, no joins: each token is seeded to its
-    character segmentation and the merge list is replayed as a chain of
-    plain replaces inside one transform lambda; symbol counts are
-    integer sums (order-independent, bit-strict). The merge list is a
-    frozen literal (plans/bpe_merges.json) — training never runs at
-    query time, mirroring the IVF/PQ/LM freeze rule."""
-    from ..functions.text import TOKEN_RE
-
-    seed = "'  ' || regexp_replace(t, '(.)', '$1  ')"
-    chain = _bpe_apply_chain(seed, merges, "spark")
-    toks = f"filter(split(lower({text_col}), '{TOKEN_RE}'), t -> t != '')"
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(f"CAST(size({toks}) AS BIGINT)").alias("n_tokens"),
-        F.expr(
-            f"CAST(aggregate({toks}, CAST(0 AS BIGINT), (acc, t) -> "
-            f"acc + size(split(trim({chain}), '  '))) AS BIGINT)"
-        ).alias("n_symbols"),
-        F.expr(
-            f"CAST(aggregate({toks}, CAST(0 AS BIGINT), (acc, t) -> "
-            f"acc + length(t)) AS BIGINT)"
-        ).alias("n_chars"),
-    )
-
-
-def bpe_segment_stats_sql(
-    table: str, id_col: str, text_col: str, merges: list[list[str]]
-) -> str:
-    seed = "'  ' || regexp_replace(t, '(.)', '\\1  ', 'g')"
-    chain = _bpe_apply_chain(seed, merges, "duckdb")
-    toks = T.tokens_sql(text_col)
-    return f"""
-    SELECT {id_col} AS doc_id,
-           CAST(len({toks}) AS BIGINT) AS n_tokens,
-           CAST(coalesce(list_sum(list_transform({toks},
-                t -> len(str_split(trim({chain}), '  ')))), 0) AS BIGINT)
-             AS n_symbols,
-           CAST(coalesce(list_sum(list_transform({toks},
-                t -> len(t))), 0) AS BIGINT) AS n_chars
-    FROM {table}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Hybrid search: reciprocal-rank fusion of lexical and semantic rankings
-# ---------------------------------------------------------------------------
-
-RRF_K = 60
-RRF_SCALE = 1_000_000
-
-
-def hybrid_rrf_topk(
-    docs: DataFrame,
-    emb: DataFrame,
-    id_col: str,
-    text_col: str,
-    vec_id_col: str,
-    vec_col: str,
-    query_max_id: int,
-    k_in: int = 20,
-    k_out: int = 10,
-) -> DataFrame:
-    """-> (query_id, doc_id, lex_rank, sem_rank, rrf_score, rank): hybrid
-    more-like-this retrieval — for each query document (id < query_max_id)
-    a LEXICAL ranking (integer tf dot product over shared terms, the
-    sparse-retrieval half) and a SEMANTIC ranking (exact embedding cosine,
-    the dense half) are fused by reciprocal-rank fusion (Cormack, Clarke
-    & Buettcher 2009): rrf = sum over rankings of RRF_SCALE // (RRF_K +
-    rank). Integer floor division keeps the fused score BIGINT — the RRF
-    trick is that only RANKS cross the fusion boundary, so the log-free
-    lexical side and the float cosine side both reduce to oracle-safe
-    integers (absent-from-one-ranking is rank 0 = no contribution, the
-    standard truncated-list RRF).
-
-    Scale shape: the lexical side is one postings self-join restricted to
-    the (tiny, broadcast) query-doc postings — fan-out bounded by the
-    query docs' term document frequencies (at web scale, cap query terms
-    by df as in conjunctive_search_topk's map-side vocabulary filter);
-    the semantic side is brute_force_topk's broadcast scan (swap in
-    pq/ivf/lsh for the ANN path — only ranks flow onward, so the fusion
-    is ranker-agnostic). Both rankings truncate to k_in before the fuse;
-    the fuse itself joins two <= |queries| * k_in row tables."""
-    from .similarity import brute_force_topk
-
-    post = inverted_postings(docs, id_col, text_col).localCheckpoint()
-    qpost = post.where(F.col("doc_id") < query_max_id).select(
-        F.col("doc_id").alias("query_id"),
-        "term",
-        F.col("tf").alias("_tfq"),
-    )
-    lex_scored = (
-        post.join(F.broadcast(qpost), on="term")
-        .where(F.col("doc_id") != F.col("query_id"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("tf") * F.col("_tfq")).cast("long").alias("_s"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_s"), F.asc("doc_id"))
-    lex = (
-        lex_scored.withColumn("lex_rank", F.row_number().over(w).cast("int"))
-        .where(F.col("lex_rank") <= k_in)
-        .select("query_id", "doc_id", "lex_rank")
-    )
-    sem = (
-        brute_force_topk(
-            emb,
-            vec_id_col,
-            vec_col,
-            emb.where(F.col(vec_id_col) < query_max_id),
-            k=k_in,
-        )
-        .select(
-            "query_id",
-            F.col("item_id").alias("doc_id"),
-            F.col("rank").alias("sem_rank"),
-        )
-    )
-    fused = (
-        lex.join(sem, on=["query_id", "doc_id"], how="full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            F.coalesce(F.col("lex_rank"), F.lit(0)).alias("lex_rank"),
-            F.coalesce(F.col("sem_rank"), F.lit(0)).alias("sem_rank"),
-        )
-        .withColumn(
-            "rrf_score",
-            # DIV = integer floor division (Spark's / on longs is a
-            # DOUBLE true-divide; DIV matches DuckDB's //)
-            F.expr(
-                f"CAST(CASE WHEN lex_rank > 0 THEN CAST({RRF_SCALE} AS BIGINT)"
-                f" DIV ({RRF_K} + lex_rank) ELSE 0 END"
-                f" + CASE WHEN sem_rank > 0 THEN CAST({RRF_SCALE} AS BIGINT)"
-                f" DIV ({RRF_K} + sem_rank) ELSE 0 END AS BIGINT)"
-            ),
-        )
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(wf).cast("int"))
-        .where(F.col("rank") <= k_out)
-        .select("query_id", "doc_id", "lex_rank", "sem_rank", "rrf_score", "rank")
-    )
-
-
-def hybrid_rrf_topk_sql(
-    table: str,
-    emb_table: str,
-    id_col: str,
-    text_col: str,
-    vec_id_col: str,
-    vec_col: str,
-    query_max_id: int,
-    k_in: int = 20,
-    k_out: int = 10,
-) -> str:
-    from .similarity import cosine_sql
-
-    cos = cosine_sql("q._q", "c._v")
-    return f"""
-    WITH post AS MATERIALIZED (
-      SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM (
-        SELECT {id_col} AS doc_id, unnest({T.tokens_sql(text_col)}) AS term
-        FROM {table}
-      ) GROUP BY term, doc_id
-    ),
-    lex_scored AS (
-      SELECT q.doc_id AS query_id, p.doc_id,
-             CAST(sum(p.tf * q.tf) AS BIGINT) AS _s
-      FROM post p JOIN post q ON p.term = q.term
-      WHERE q.doc_id < {query_max_id} AND p.doc_id != q.doc_id
-      GROUP BY q.doc_id, p.doc_id
-    ),
-    lex AS (
-      SELECT query_id, doc_id, CAST(_r AS INT) AS lex_rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY _s DESC, doc_id ASC) AS _r FROM lex_scored
-      ) WHERE _r <= {k_in}
-    ),
-    corpus AS (SELECT {vec_id_col} AS item_id, {vec_col} AS _v FROM {emb_table}),
-    qv AS (SELECT {vec_id_col} AS query_id, {vec_col} AS _q FROM {emb_table}
-           WHERE {vec_id_col} < {query_max_id}),
-    sem_scored AS (
-      SELECT q.query_id, c.item_id AS doc_id, {cos} AS sim
-      FROM corpus c CROSS JOIN qv q WHERE c.item_id != q.query_id
-    ),
-    sem AS (
-      SELECT query_id, doc_id, CAST(_r AS INT) AS sem_rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY sim DESC, doc_id ASC) AS _r FROM sem_scored
-      ) WHERE _r <= {k_in}
-    ),
-    fused AS (
-      SELECT coalesce(l.query_id, s.query_id) AS query_id,
-             coalesce(l.doc_id, s.doc_id) AS doc_id,
-             coalesce(l.lex_rank, 0) AS lex_rank,
-             coalesce(s.sem_rank, 0) AS sem_rank,
-             CAST(CASE WHEN coalesce(l.lex_rank, 0) > 0
-                       THEN {RRF_SCALE} // ({RRF_K} + l.lex_rank) ELSE 0 END
-                + CASE WHEN coalesce(s.sem_rank, 0) > 0
-                       THEN {RRF_SCALE} // ({RRF_K} + s.sem_rank) ELSE 0 END
-                  AS BIGINT) AS rrf_score
-      FROM lex l FULL OUTER JOIN sem s
-        ON l.query_id = s.query_id AND l.doc_id = s.doc_id
-    )
-    SELECT query_id, doc_id, lex_rank, sem_rank, rrf_score, rank FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY rrf_score DESC, doc_id ASC) AS INT) AS rank
-      FROM fused
-    ) WHERE rank <= {k_out}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Deterministic corruption channel (augmentation / matcher training pairs)
-# ---------------------------------------------------------------------------
-
-CORRUPT_PCT = 5          # per-character substitution probability (%)
-CORRUPT_SALT = "aug1"
-
-
-def corruption_kernel(pct: int = CORRUPT_PCT, salt: str = CORRUPT_SALT):
-    """Arrow-batched twin of the corruption expression chain — identical
-    bytes (hashlib md5 == both engines' md5; same mod arithmetic). The
-    hot path: the expression form is a nested interpreted
-    HigherOrderFunction per character (measured ~14s for 5k docs at
-    sf0.1 vs ~2s here) — the CLAUDE.md lambda-cost lore, with the
-    kernel as the escape hatch. Parity asserted in test_corpus."""
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("struct<text_aug: string, n_edits: bigint>")
-    def _aug(ids, texts):
-        outs, ed = [], []
-        for did, t in zip(ids, texts):
-            t = t or ""
-            chars = list(t)
-            n = 0
-            pre = f"{salt}:{did}:"
-            for i, ch in enumerate(chars, start=1):
-                if "a" <= ch <= "z":
-                    h = int(
-                        hashlib.md5(f"{pre}{i}".encode()).hexdigest()[:15], 16
-                    )
-                    if h % 100 < pct:
-                        chars[i - 1] = chr(
-                            97 + (ord(ch) - 97 + 1 + h % 25) % 26
-                        )
-                        n += 1
-            outs.append("".join(chars))
-            ed.append(n)
-        return pd.DataFrame({"text_aug": outs, "n_edits": ed})
-
-    return _aug
-
-
-def corruption_augment(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    pct: int = CORRUPT_PCT,
-    salt: str = CORRUPT_SALT,
-    impl: str = "arrow",
-) -> DataFrame:
-    """-> (doc_id, text_aug, n_edits): a deterministic noisy copy of each
-    document — every [a-z] character is substituted with probability
-    pct%% by a DIFFERENT letter, both the decision and the replacement
-    derived from phash(salt:doc:pos) — the reference vignette's
-    record-corruption channel (vignette data = clean + corrupted
-    duplicates) lifted to a reusable operator: (text, text_aug) rows are
-    the self-supervised positive pairs a matcher/comparator is trained
-    and calibrated on, with n_edits the known edit count the calibration
-    curve is sliced by.
-
-    Determinism: the channel is a pure function of (salt, id, position),
-    so augmentation is reproducible across runs, partitionings and
-    engines (phash is the one cross-engine hash). The replacement letter
-    is chr('a' + (1 + h mod 25) + orig) mod 26 — never the original, so
-    n_edits equals the literal character-diff count, which is how the
-    operator computes it (comparing orig vs aug char positions, no
-    second hash pass — the single-eval rule applied to the hash chain).
-    Non-letter characters (spaces, digits) pass through untouched.
-
-    Scale shape: map-side single scan; per character one md5; no
-    shuffle, no join. impl: "arrow" (default) = corruption_kernel, the
-    batch hot path; "expr" = the pure-Catalyst twin (bit-identical,
-    kept as the oracle-shareable form — its nested per-char lambdas run
-    interpreted, the measured HOF cost the kernel avoids)."""
-    if impl == "arrow":
-        kern = corruption_kernel(pct, salt)
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            kern(F.col(id_col), F.col(text_col)).alias("_s"),
-        ).select("doc_id", "_s.text_aug", "_s.n_edits")
-    # the per-position hash is bound ONCE via the single-element-array
-    # lambda trick (transform(array(h), h -> ...)[1]) — the portable
-    # let-binding; a naive CASE would md5 every position twice
-    h_expr = (
-        f"CAST(conv(substring(md5(concat('{salt}', ':', "
-        f"CAST({id_col} AS STRING), ':', CAST(i AS STRING))), 1, 15), 16, 10) "
-        f"AS BIGINT)"
-    )
-    pos_marks = (
-        f"transform(sequence(1, length({text_col})), i -> "
-        f"element_at(transform(array({h_expr}), h -> "
-        f"CASE WHEN substring({text_col}, i, 1) >= 'a' "
-        f"AND substring({text_col}, i, 1) <= 'z' "
-        f"AND pmod(h, 100) < {pct} "
-        f"THEN chr(97 + pmod(ascii(substring({text_col}, i, 1)) - 97 + 1 + "
-        f"pmod(h, 25), 26)) "
-        f"ELSE substring({text_col}, i, 1) END), 1))"
-    )
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_txt"),
-        F.expr(
-            pos_marks.replace(text_col, "__T__").replace("__T__", text_col)
-        ).alias("_chars"),
-    ).localCheckpoint()  # _chars is consumed twice below (aug + diff count)
-    return base.select(
-        "doc_id",
-        F.array_join(F.col("_chars"), "").alias("text_aug"),
-        F.expr(
-            "CAST(size(filter(zip_with(_chars, split(_txt, ''), "
-            "(a, b) -> a != b), x -> x)) AS BIGINT)"
-        ).alias("n_edits"),
-    )
-
-
-def corruption_augment_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    pct: int = CORRUPT_PCT,
-    salt: str = CORRUPT_SALT,
-) -> str:
-    h = (
-        f"CAST(('0x' || substr(md5('{salt}' || ':' || "
-        f"CAST({id_col} AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 15)) "
-        f"AS BIGINT)"
-    )
-    chars = (
-        f"list_transform(range(1, length({text_col}) + 1), i -> "
-        f"list_transform([{h}], h -> "
-        f"CASE WHEN substring({text_col}, i, 1) >= 'a' "
-        f"AND substring({text_col}, i, 1) <= 'z' "
-        f"AND h %% 100 < {pct} "
-        f"THEN chr(CAST(97 + (ascii(substring({text_col}, i, 1)) - 97 + 1 + "
-        f"h %% 25) %% 26 AS INTEGER)) "
-        f"ELSE substring({text_col}, i, 1) END)[1])"
-    ).replace("%%", "%")
-    return f"""
-    WITH aug AS MATERIALIZED (
-      SELECT {id_col} AS doc_id, {text_col} AS _txt,
-             {chars} AS _chars
-      FROM {table}
-    )
-    SELECT doc_id,
-           -- list_aggr returns NULL on an empty list; Spark's array_join
-           -- returns '' — coalesce so empty-text docs agree across engines
-           coalesce(list_aggr(_chars, 'string_agg', ''), '') AS text_aug,
-           CAST(len(list_filter(
-               list_transform(range(1, len(_chars) + 1),
-                              i -> _chars[i] != substring(_txt, i, 1)),
-               x -> x)) AS BIGINT) AS n_edits
-    FROM aug
-    """
-
-
-# ---------------------------------------------------------------------------
-# Winnowing fingerprints (MOSS local document fingerprinting)
-# ---------------------------------------------------------------------------
-
-WINNOW_K = 8   # character k-gram width
-WINNOW_W = 4   # winnowing window (guarantee: any match >= k+w-1 chars shares a fp)
-
-
-def winnowing_kernel(k: int = WINNOW_K, w: int = WINNOW_W):
-    """Arrow-batched twin of the winnowing expression chain — identical
-    output (hashlib md5 == both engines' md5; numpy rolling min with the
-    rightmost-tie rule). The hot path: the expression form's per-window
-    interpreted lambdas measured ~15x slower; parity asserted in
-    test_corpus."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<struct<pos: long, fp: long>>")
-    def _win(texts):
-        out = []
-        for t in texts:
-            t = t or ""
-            n = len(t) - k + 1
-            if n < w:
-                out.append([])
-                continue
-            gh = np.array(
-                [
-                    int(hashlib.md5(t[i : i + k].encode()).hexdigest()[:15], 16)
-                    for i in range(n)
-                ],
-                dtype=np.int64,
-            )
-            win = np.lib.stride_tricks.sliding_window_view(gh, w)
-            # rightmost minimal: argmin of the reversed window
-            right_arg = (w - 1) - np.argmin(win[:, ::-1], axis=1)
-            pos = np.arange(len(win)) + right_arg + 1  # 1-based
-            sel = sorted(set(int(p) for p in pos))
-            out.append([{"pos": p, "fp": int(gh[p - 1])} for p in sel])
-        return pd.Series(out)
-
-    return _win
-
-
-def winnowing_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    impl: str = "arrow",
-) -> DataFrame:
-    """-> (doc_id, pos, fp): winnowing fingerprints (Schleimer, Wilkerson
-    & Aiken 2003 — the MOSS algorithm): per k-gram-hash window of width w
-    select the RIGHTMOST minimal hash; the selected (position, hash)
-    pairs are the document's local fingerprints. Guarantee: any shared
-    substring of length >= k + w - 1 yields at least one shared
-    fingerprint, with density ~2/(w+1) — the position-aware complement of
-    MinHash (global similarity) and CDC (content-defined chunk
-    boundaries): winnowing localizes WHERE documents overlap, which is
-    what plagiarism/attribution queries need.
-
-    Engine-portable selection rule: per window the minimal hash binds
-    once (array-wrap let-binding), then the rightmost position with that
-    hash is an integer max over the window's indices — no struct
-    ordering relied on in either engine. The gram-hash array is built
-    ONCE per document in its own projection (hash-once below everything,
-    the repo rule).
-
-    Scale shape: map-side per-document arrays (O(n*w) comparisons per
-    doc, integer-only after the one md5 pass per gram); one explode of
-    the ~n/w selected positions; no shuffle, no join. Fingerprint
-    postings (fp -> docs) are then one groupBy away, the same inverted
-    shape as inverted_postings. impl: "arrow" (default) =
-    winnowing_kernel; "expr" = the pure-Catalyst oracle-shaped twin."""
-    if impl == "arrow":
-        kern = winnowing_kernel(k, w)
-        return (
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(kern(F.col(text_col))).alias("_s"),
-            )
-            .select("doc_id", "_s.pos", "_s.fp")
-        )
-    gh = (
-        f"CASE WHEN length({text_col}) < {k} THEN "
-        f"CAST(array() AS array<bigint>) ELSE "
-        f"transform(sequence(1, length({text_col}) - {k} + 1), i -> "
-        f"CAST(conv(substring(md5(substring({text_col}, i, {k})), 1, 15), "
-        f"16, 10) AS BIGINT)) END"
-    )
-    # localCheckpoint: every window lambda references _gh — without the
-    # barrier CollapseProject inlines the n-md5 gram array into each
-    # element_at, turning O(n*w) into O(n^2*w) md5 per document
-    g = df.select(
-        F.col(id_col).alias("doc_id"), F.expr(gh).alias("_gh")
-    ).localCheckpoint()
-    pos_expr = (
-        f"element_at(transform(array(array_min(slice(_gh, j, {w}))), h -> "
-        f"array_max(filter(sequence(j, j + {w} - 1), "
-        f"i -> element_at(_gh, i) = h))), 1)"
-    )
-    sel = g.select(
-        "doc_id",
-        "_gh",
-        F.expr(
-            f"CASE WHEN size(_gh) < {w} THEN CAST(array() AS array<int>) "
-            f"ELSE array_distinct(transform(sequence(1, size(_gh) - {w} + 1), "
-            f"j -> CAST({pos_expr} AS INT))) END"
-        ).alias("_pos"),
-    )
-    return sel.select(
-        "doc_id", "_gh", F.explode("_pos").alias("pos")
-    ).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.expr("element_at(_gh, pos)").cast("long").alias("fp"),
-    )
-
-
-def winnowing_fingerprints_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> str:
-    gh = (
-        f"CASE WHEN length({text_col}) < {k} THEN CAST([] AS BIGINT[]) ELSE "
-        f"list_transform(range(1, length({text_col}) - {k} + 2), i -> "
-        f"CAST(('0x' || substr(md5(substring({text_col}, i, {k})), 1, 15)) "
-        f"AS BIGINT)) END"
-    )
-    pos_expr = (
-        f"list_transform([list_min(_gh[j : j + {w} - 1])], h -> "
-        f"list_max(list_filter(range(j, j + {w}), "
-        f"i -> _gh[i] = h)))[1]"
-    )
-    return f"""
-    WITH g AS MATERIALIZED (
-      SELECT {id_col} AS doc_id, {gh} AS _gh FROM {table}
-    ),
-    sel AS (
-      SELECT doc_id, _gh,
-             CASE WHEN len(_gh) < {w} THEN CAST([] AS INT[])
-                  ELSE list_distinct(list_transform(
-                      range(1, len(_gh) - {w} + 2),
-                      j -> CAST({pos_expr} AS INT))) END AS _pos
-      FROM g
-    )
-    SELECT doc_id, CAST(p AS BIGINT) AS pos, CAST(_gh[p] AS BIGINT) AS fp
-    FROM sel, unnest(_pos) AS u(p)
-    """
-
-
-WINNOW_MIN_SHARED = 2
-WINNOW_MAX_BUCKET = 1000
-
-
-def winnowing_overlap_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_shared: int = WINNOW_MIN_SHARED,
-    max_bucket_rows: int | None = WINNOW_MAX_BUCKET,
-) -> DataFrame:
-    """-> (id_a, id_b, n_shared_fp): document pairs sharing >= min_shared
-    winnowing fingerprints — the MOSS plagiarism join: by the winnowing
-    guarantee a shared substring of length >= k + w - 1 surfaces as a
-    shared fingerprint, so n_shared_fp lower-bounds textual overlap in a
-    POSITION-ROBUST way (unlike dup_span_stats' aligned spans, overlap
-    is found wherever it moved in either document).
-
-    Scale shape: the self-join runs on DISTINCT per-doc fingerprint
-    hashes (positions dropped before joining — a fingerprint repeated
-    inside one doc must not multiply pairs); oversized fingerprint
-    buckets (boilerplate grams shared by thousands of docs) are
-    salt-split via blocking.salt_buckets, the LSH-family rule, and the
-    fingerprint table is localCheckpoint'ed (consumed by both join
-    sides). Pair counts are a map-side-combined aggregate; output is
-    oriented id_a < id_b."""
-    from .blocking import salt_buckets
-
-    fps = (
-        winnowing_fingerprints(df, id_col, text_col)
-        .select("doc_id", "fp")
-        .distinct()
-    )
-    fps = salt_buckets(fps, "fp", "doc_id", max_bucket_rows).localCheckpoint()
-    a = fps.select(
-        F.col("doc_id").alias("id_a"), "fp", "_bsalt"
-    )
-    b = fps.select(
-        F.col("doc_id").alias("id_b"), "fp", "_bsalt"
-    )
-    return (
-        a.join(b, on=["fp", "_bsalt"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_fp"))
-        .where(F.col("n_shared_fp") >= min_shared)
-    )
-
-
-def winnowing_overlap_pairs_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    min_shared: int = WINNOW_MIN_SHARED,
-    max_bucket_rows: int | None = WINNOW_MAX_BUCKET,
-) -> str:
-    from .blocking import salt_buckets_sql
-
-    salt = salt_buckets_sql("fp", "doc_id", max_bucket_rows)
-    return f"""
-    WITH fps0 AS MATERIALIZED (
-      SELECT DISTINCT doc_id, fp FROM (
-        {winnowing_fingerprints_sql(table, id_col, text_col)}
-      )
-    ),
-    fps AS MATERIALIZED (
-      SELECT doc_id, fp, {salt} AS _bsalt FROM fps0
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(count(*) AS BIGINT) AS n_shared_fp
-    FROM fps a JOIN fps b
-      ON a.fp = b.fp AND a._bsalt = b._bsalt AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-    HAVING count(*) >= {min_shared}
     """

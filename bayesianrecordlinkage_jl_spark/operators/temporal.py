@@ -382,7 +382,7 @@ def event_bursts(
     series and therefore don't dilute the baseline — the documented
     semantics), with at least `min_hist` observed buckets of history.
     The crawl-ops signal for scrape storms / outage error spikes that a
-    recrawl scheduler consumes alongside host_reputation.
+    recrawl scheduler consumes.
 
     All-integer: the threshold is the cross-multiplied comparison
     n_events * base_n > factor * base_sum — no division, no floats, so

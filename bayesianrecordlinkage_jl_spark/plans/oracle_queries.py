@@ -51,13 +51,6 @@ EMB_DIM_DEDUP = 64
 EMB_COS_MIN = 0.3  # sf testdata max pairwise cosine is ~0.51
 EMB_LSH_PLANES = 4
 SPAN_K = 8  # duplicated-span gram width (words)
-SEARCH_K = 10
-SEARCH_QUERIES = {1: ("spark", "window"), 2: ("customer", "join", "table")}
-# mixture/epoch rates: upsampled, default-1.0, downsampled, and dropped
-# sources all exercised (src names are stable across SFs in the fixture)
-MIXTURE_RATES = {"src0": 2.5, "src1": 2.0, "src2": 0.5, "src3": 0.25, "src19": 0.0}
-VOCAB_K = 50
-TOKEN_BUDGET = 600  # per-source token budget: cuts a STRICT prefix at sf0.01
 # FS decision thresholds: all three bands non-empty at every SF
 # (sf0.001: 1/53/1409, sf0.01: 2/53/1566, sf0.1: 67/5083/154143)
 FS_LOWER, FS_UPPER = -1.0, 2.0
@@ -1903,41 +1896,6 @@ def build_catalog() -> dict[str, dict]:
         "cluster keep -> domain cap -> split -> packed training windows, "
         "one relational pipeline (oracle composes the per-stage twins)",
     }
-    cat["search_conjunctive"] = {
-        "spark": lambda s, d: corpus.conjunctive_search_topk(
-            load(s, d, "documents"), "doc_id", "text",
-            SEARCH_QUERIES, k=SEARCH_K,
-        ),
-        "sql": corpus.conjunctive_search_topk_sql(
-            "documents", "doc_id", "text", SEARCH_QUERIES, k=SEARCH_K
-        ),
-        "ref": "inverted-index conjunctive search, tf-ranked top-k "
-        "(map-side vocabulary filter; per-query window over matched "
-        "docs only)",
-    }
-    cat["hybrid_search_rrf"] = {
-        "spark": lambda s, d: corpus.hybrid_rrf_topk(
-            load(s, d, "documents"), load(s, d, "embeddings"),
-            "doc_id", "text", "vec_id", "embedding", TOPK_QUERY_MAX_ID,
-        ),
-        "sql": corpus.hybrid_rrf_topk_sql(
-            "documents", "embeddings", "doc_id", "text", "vec_id",
-            "embedding", TOPK_QUERY_MAX_ID,
-        ),
-        "ref": "hybrid retrieval via reciprocal-rank fusion (Cormack et "
-        "al. 2009): integer tf-dot lexical ranking + exact-cosine "
-        "semantic ranking fused on RANKS with integer floor division — "
-        "ranker-agnostic, oracle-safe (corpus.hybrid_rrf_topk)",
-    }
-    cat["vocabulary_topk"] = {
-        "spark": lambda s, d: corpus.vocabulary_topk(
-            load(s, d, "documents"), "doc_id", "text", k=VOCAB_K
-        ),
-        "sql": corpus.vocabulary_topk_sql("documents", "doc_id", "text", k=VOCAB_K),
-        "ref": "corpus vocabulary top-k by term frequency with document "
-        "frequency (tokenizer-training prep; TakeOrdered partial top-k, "
-        "never a full sort)",
-    }
     cat["split_decontamination"] = {
         "spark": lambda s, d: corpus.split_decontamination(
             load(s, d, "documents"), "doc_id", "text",
@@ -1949,68 +1907,6 @@ def build_catalog() -> dict[str, dict]:
         "ref": "train/test leakage audit: flags TRAIN docs sharing k-word "
         "spans with held-out TEST docs under the deterministic hash split "
         "(split membership is a per-row function — no split-table join)",
-    }
-    cat["quality_classifier"] = {
-        "spark": lambda s, d: corpus.quality_classifier(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": corpus.quality_classifier_sql("documents", "doc_id", "text"),
-        "ref": "hashed-bag-of-words linear quality classifier "
-        "(fastText/CCNet-style model gate; frozen integer weights, "
-        "one exactly-rounded final division)",
-    }
-    cat["mixture_sample"] = {
-        "spark": lambda s, d: corpus.mixture_sample(
-            load(s, d, "documents"), "doc_id", "source", MIXTURE_RATES
-        ),
-        "sql": corpus.mixture_sample_sql(
-            "documents", "doc_id", "source", MIXTURE_RATES
-        ),
-        "ref": "per-source mixture/epoch reweighting (DoReMi-style): "
-        "deterministic-hash fractional epochs, one row per training copy",
-    }
-    cat["pii_redaction"] = {
-        # Synthetic PII is injected into every 3rd document from doc_id
-        # (the corpus fixture has none), identically in both emitters, so
-        # the masking regexes are exercised on real positives AND on
-        # untouched documents (zero-count path).
-        "spark": lambda s, d: load(s, d, "documents")
-        .withColumn(
-            "_t",
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.col("text"),
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com or call 555-"),
-                    F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                ),
-            ).otherwise(F.col("text")),
-        )
-        .select(
-            "doc_id",
-            T.pii_email_count(F.col("_t")).alias("n_emails"),
-            T.pii_phone_count(F.col("_t")).alias("n_phones"),
-            T.phash(T.pii_redact(F.col("_t"))).alias("redacted_hash"),
-        ),
-        "sql": f"""
-        SELECT doc_id,
-               {T.pii_email_count_sql('_t')} AS n_emails,
-               {T.pii_phone_count_sql('_t')} AS n_phones,
-               {T.phash_sql(T.pii_redact_sql('_t'))} AS redacted_hash
-        FROM (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0 THEN text || ' contact user'
-                      || CAST(doc_id AS VARCHAR) || '@example.com or call 555-'
-                      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE text END AS _t
-          FROM documents
-        )
-        """,
-        "ref": "PII scrub stage: email/phone detection counts + masked-text "
-        "fingerprint (Java-regex/RE2 common-subset patterns, all-occurrence "
-        "replace in both engines)",
     }
 
     cat["dedup_containment"] = {
@@ -2122,60 +2018,6 @@ def build_catalog() -> dict[str, dict]:
         "ref": "incremental-crawl diff: added/removed/changed/unchanged per "
         "canonical url by content fingerprint (one full-outer join on the "
         "unique url key)",
-    }
-
-    # --- host reputation: PageRank x mean classifier quality per host —
-    # the crawl-prioritization composite (authority AND content quality),
-    # pure composition of linkgraph + corpus ops. Mean is a double division
-    # of exact integers (sum_raw can be negative, so no integer div). ---
-    def _host_reputation(s, d):
-        docs = load(s, d, "documents")
-        q = corpus.quality_classifier(docs, "doc_id", "text").select(
-            "doc_id", "raw_score"
-        )
-        hosts = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            linkgraph.page_host("doc_id").alias("host"),
-        )
-        per_host = (
-            hosts.join(q, on="doc_id")
-            .groupBy("host")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("raw_score").cast("long").alias("sum_raw"),
-            )
-        )
-        pr = linkgraph.pagerank_hosts(
-            linkgraph.host_link_graph(docs, "doc_id", "text")
-        )
-        return per_host.join(pr, on="host").select(
-            "host", "n_docs", "sum_raw",
-            (
-                F.col("sum_raw").cast("double")
-                / F.col("n_docs").cast("double")
-            ).alias("mean_raw"),
-            "rank_fp",
-        )
-
-    cat["host_reputation"] = {
-        "spark": _host_reputation,
-        "sql": f"""
-        WITH q AS (SELECT doc_id, raw_score FROM
-                   ({corpus.quality_classifier_sql('documents', 'doc_id', 'text')})),
-        h AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     {linkgraph.page_host_sql('doc_id')} AS host
-              FROM documents),
-        ph AS (SELECT host, CAST(count(*) AS BIGINT) AS n_docs,
-                      CAST(sum(raw_score) AS BIGINT) AS sum_raw
-               FROM h JOIN q USING (doc_id) GROUP BY host),
-        pr AS (SELECT * FROM ({linkgraph.pagerank_hosts_sql('documents', 'doc_id', 'text')}))
-        SELECT ph.host, n_docs, sum_raw,
-               CAST(sum_raw AS DOUBLE) / CAST(n_docs AS DOUBLE) AS mean_raw,
-               rank_fp
-        FROM ph JOIN pr ON ph.host = pr.host
-        """,
-        "ref": "crawl-prioritization composite: link authority (PageRank) "
-        "joined with model-based content quality per host",
     }
 
     # --- cardinality sketches (operators/sketches.py): HLL + KMV over
@@ -2296,20 +2138,6 @@ def build_catalog() -> dict[str, dict]:
         "iterative min-plus joins — unweighted companion to trustrank)",
     }
 
-    # --- boilerplate removal: the transformation on top of span
-    # detection — CCNet-style paragraph dedup with the surviving chunks
-    # re-joined in document order (string_agg ORDER BY / array_sort-of-
-    # structs twins keep the rebuilt text byte-identical). ---
-    cat["boilerplate_strip"] = {
-        "spark": lambda s, d: corpus.boilerplate_strip(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": corpus.boilerplate_strip_sql("documents", "doc_id", "text"),
-        "ref": "repeated-chunk boilerplate strip (CCNet paragraph dedup: "
-        "flag + REMOVE chunks seen in >=2 distinct docs, emit cleaned "
-        "normalized text)",
-    }
-
     # --- longest duplicated span: the gaps-and-islands companion to
     # dup_span_stats (run length of CONSECUTIVE duplicated shingle
     # positions — the exact-substring-dedup cut signal). ---
@@ -2356,34 +2184,6 @@ def build_catalog() -> dict[str, dict]:
         "ref": "SALSA hub/authority scores (Lempel-Moran: HITS recursion "
         "with per-node out-/in-weight normalization; fixed-point integer, "
         "chained-CTE oracle)",
-    }
-
-    # --- quality-ranked token-budget selection (curriculum cut) ---
-    def _budget_scored_spark(s, d):
-        docs = load(s, d, "documents")
-        q = corpus.quality_classifier(docs, "doc_id", "text").select(
-            "doc_id", "n_tokens", "raw_score"
-        )
-        return q.join(
-            docs.select(
-                F.col("doc_id").cast("long").alias("doc_id"), "source"
-            ),
-            on="doc_id",
-        )
-
-    _budget_scored_sql = (
-        "(SELECT q.doc_id, d.source, q.raw_score, q.n_tokens FROM ("
-        + corpus.quality_classifier_sql("documents", "doc_id", "text")
-        + ") q JOIN documents d ON q.doc_id = CAST(d.doc_id AS BIGINT))"
-    )
-    cat["token_budget_curriculum"] = {
-        "spark": lambda s, d: corpus.token_budget_select(
-            _budget_scored_spark(s, d), TOKEN_BUDGET
-        ),
-        "sql": corpus.token_budget_select_sql(_budget_scored_sql, TOKEN_BUDGET),
-        "ref": "per-source quality-ranked token-budget selection (take the "
-        "best-scored prefix that fits the token budget — curriculum / "
-        "data-constrained-scaling cut; one shared window per source)",
     }
 
     # --- Fellegi-Sunter three-way decision rule (the 1969 A1/A2/A3
@@ -2507,108 +2307,6 @@ def build_catalog() -> dict[str, dict]:
         FROM documents
         """,
         "ref": "language-ID / quality / token-count / fingerprint",
-    }
-
-    # --- frozen char-trigram LM quality scoring (CCNet-style) ---
-    # Model: corpus.train_ngram_lm on the sf0.01 documents (top-256
-    # trigrams, integer-quantized log-probs), frozen to ngram_lm.json —
-    # the freeze-don't-train-at-query-time rule. Integer lm_score sums are
-    # partitioning-order independent; avg_score is ONE double division.
-    def _ngram_lm(s: SparkSession, d: str) -> DataFrame:
-        import json as _j
-        import os as _o
-
-        with open(
-            _o.path.join(_o.path.dirname(_o.path.abspath(__file__)),
-                         "ngram_lm.json")
-        ) as f:
-            model = _j.load(f)
-        return corpus.ngram_lm_scores(load(s, d, "documents"), "doc_id", "text", model)
-
-    def _ngram_lm_sql() -> str:
-        import json as _j
-        import os as _o
-
-        with open(
-            _o.path.join(_o.path.dirname(_o.path.abspath(__file__)),
-                         "ngram_lm.json")
-        ) as f:
-            model = _j.load(f)
-        return corpus.ngram_lm_scores_sql("documents", "doc_id", "text", model)
-
-    cat["bpe_merges"] = {
-        "spark": lambda s, d: corpus.bpe_train(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": corpus.bpe_train_sql("documents", "doc_id", "text"),
-        "ref": "BPE tokenizer-training pass (Sennrich et al. 2016): merge "
-        "rounds over the weighted type vocabulary; corpus touched once, "
-        "rounds touch |types| rows only (corpus.bpe_train)",
-    }
-    # frozen learned merges (plans/bpe_merges.json) — static oracle rule
-    def _bpe_merge_list() -> list:
-        import json as _j
-        import os as _o
-
-        with open(
-            _o.path.join(_o.path.dirname(_o.path.abspath(__file__)),
-                         "bpe_merges.json")
-        ) as f:
-            return _j.load(f)
-
-    cat["bpe_segment_stats"] = {
-        "spark": lambda s, d: corpus.bpe_segment_stats(
-            load(s, d, "documents"), "doc_id", "text", _bpe_merge_list()
-        ),
-        "sql": corpus.bpe_segment_stats_sql(
-            "documents", "doc_id", "text", _bpe_merge_list()
-        ),
-        "ref": "subword budget under the frozen learned BPE vocabulary "
-        "(tokens-per-doc signal for curriculum/budget ops; "
-        "corpus.bpe_segment_stats — map-side replay of the merge chain)",
-    }
-    cat["winnowing_fingerprints"] = {
-        "spark": lambda s, d: corpus.winnowing_fingerprints(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": corpus.winnowing_fingerprints_sql("documents", "doc_id", "text"),
-        "ref": "winnowing local fingerprints (Schleimer et al. 2003, MOSS): "
-        "rightmost-minimal k-gram hash per window — position-aware overlap "
-        "localization, the complement of MinHash/CDC "
-        "(corpus.winnowing_fingerprints)",
-    }
-    # min_shared=32: the synthetic corpus draws from a ~40-word vocabulary,
-    # so low thresholds mark nearly every doc pair as overlapping (54k
-    # pairs at 8); 32 isolates the true near-dup tail (172 pairs at
-    # sf0.01). Real web text is nowhere near this gram-collision rate.
-    WINNOW_MIN_SHARED_CAT = 32
-    cat["winnowing_overlap_pairs"] = {
-        "spark": lambda s, d: corpus.winnowing_overlap_pairs(
-            load(s, d, "documents"), "doc_id", "text",
-            min_shared=WINNOW_MIN_SHARED_CAT,
-        ),
-        "sql": corpus.winnowing_overlap_pairs_sql(
-            "documents", "doc_id", "text", min_shared=WINNOW_MIN_SHARED_CAT
-        ),
-        "ref": "MOSS overlap join over winnowing fingerprints (position-"
-        "robust shared-substring pairs; salted fp self-join per the "
-        "LSH-family rule; corpus.winnowing_overlap_pairs)",
-    }
-    cat["corruption_augment"] = {
-        "spark": lambda s, d: corpus.corruption_augment(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": corpus.corruption_augment_sql("documents", "doc_id", "text"),
-        "ref": "deterministic corruption channel (the reference vignette's "
-        "record-noise model as a reusable operator): per-char phash-driven "
-        "substitutions, never the original letter, exact n_edits "
-        "(corpus.corruption_augment)",
-    }
-    cat["ngram_lm_scores"] = {
-        "spark": _ngram_lm,
-        "sql": _ngram_lm_sql(),
-        "ref": "CCNet-style LM quality filter (Wenzek et al. 2020), char-"
-        "trigram reduction; corpus.train_ngram_lm / ngram_lm_scores",
     }
 
     # --- similarity search (training-data ops) ---
@@ -3905,55 +3603,6 @@ def build_catalog() -> dict[str, dict]:
         "reusing the frozen IVF quantizer (plans/ivf_centroids.json)",
     }
 
-    # --- multimodal plumbing (decode kernel stubbed; byte-histogram oracle) ---
-    def _multimodal(s: SparkSession, d: str) -> DataFrame:
-        from ..operators import multimodal
-
-        media = multimodal.synthesize_media(s, n=64)
-        return multimodal.extract_features(media, dim=8)
-
-    from ..operators.multimodal import features_oracle_sql
-
-    def _multimodal_resize(s: SparkSession, d: str) -> DataFrame:
-        from ..operators import multimodal
-
-        return multimodal.resize_plan(multimodal.synthesize_media(s, n=64))
-
-    from ..operators.multimodal import resize_plan_oracle_sql
-
-    cat["multimodal_resize"] = {
-        "spark": _multimodal_resize,
-        "sql": resize_plan_oracle_sql(n=64),
-        "ref": "metadata-only resize planning (aspect-preserving, no "
-        "payload scan; the resample is the stubbed decode-kernel slot)",
-    }
-
-    cat["multimodal_features"] = {
-        "spark": _multimodal,
-        "sql": features_oracle_sql(n=64, dim=8, payload_bytes=256),
-        "ref": "mapInPandas media feature extraction (stubbed decode kernel; "
-        "oracle re-derives the byte histogram in pure SQL)",
-    }
-
-    # --- video frame pipeline: PNGV container synth -> frame_sample_plan
-    # -> seek + per-frame PNG decode -> dyadic histograms; the oracle
-    # re-derives every sampled frame's pixels from the closed-form formula
-    # (no codec in SQL), so the container round-trip is value-checked ---
-    def _frame_features(s: SparkSession, d: str) -> DataFrame:
-        from ..operators import multimodal
-
-        vids = multimodal.synthesize_videos(s, n=32)
-        return multimodal.sampled_frame_features(vids, every_ms=500, dim=8)
-
-    from ..operators.multimodal import frame_features_oracle_sql
-
-    cat["multimodal_frame_features"] = {
-        "spark": _frame_features,
-        "sql": frame_features_oracle_sql(n=32, every_ms=500, dim=8),
-        "ref": "video frame sampling + decode (frame_sample_plan is the "
-        "Catalyst planner; PNGV seek keeps decode per sampled frame)",
-    }
-
     # --- threshold sensitivity diagnostic (SURVEY 2.7; driver loop) ---
     def _threshold_sensitivity(s: SparkSession, d: str) -> DataFrame:
         import pandas as pd
@@ -4060,11 +3709,9 @@ def build_catalog() -> dict[str, dict]:
                 F.nullif(F.col("occup_b"), F.lit("NA")),
             ),
         }
-        kinds = [("g_gname", "lev"), ("g_fname", "lev"),
-                 ("g_age", "exact"), ("g_occup", "exact")]
         nlv = {"g_gname": 4, "g_fname": 4, "g_age": 2, "g_occup": 2}
         links, _params = link_two_sources(
-            s, ra, rb, fexprs, kinds, nlv, block_cols=["gender"]
+            s, ra, rb, fexprs, nlv, block_cols=["gender"]
         )
         return links.select("rid_a", "rid_b", "block_id")
 

@@ -59,7 +59,8 @@ class LinkageConfig:
     exact_max_block_pairs: int = 10
     # cap on pairs per resolution block; oversized components are re-clustered
     # at rising thresholds (iterative_bipartite_cluster2 analog) so no block
-    # can blow up the per-block solver at scale
+    # can blow up the per-block solver at scale. The blocks are also
+    # run_linkage's clusters, so a split changes the cluster output too
     max_block_pairs: int = 10_000
     checkpoint_dir: str | None = None
 
@@ -320,12 +321,15 @@ def run_linkage(
 
     links = stage("links", _links)
 
-    # -- transitive clustering: CC of the positive-weight graph -------------
-    # (the links table is the one-to-one precision artifact; clusters are the
-    # transitive closure of above-penalty evidence, exactly the reference's
-    # post-hoc-block construction, /root/reference/src/posthocblocks.jl:89-116.
-    # For two-file linkage where clusters ARE the matching, see
-    # link_two_sources below.)
+    # -- clusters: the size-capped post-hoc blocks -------------------------
+    # (the links table is the one-to-one precision artifact.) Clusters are
+    # the blocks in comps: connected components of the above-penalty graph
+    # (the reference's post-hoc blocks, src/posthocblocks.jl:89-116), except
+    # that a component with more than max_block_pairs pairs is split at
+    # rising thresholds. So whenever a split happens, max_block_pairs shapes
+    # the cluster output, not only the per-block solver's work. Nodes without
+    # an above-penalty edge are singletons. For two-file linkage, where the
+    # clusters ARE the matching, see link_two_sources below.
     def _clusters() -> DataFrame:
         return docs.select("node", "url").join(comps, on="node", how="left").select(
             "url",
@@ -351,23 +355,20 @@ def link_two_sources(
     df_a: DataFrame,
     df_b: DataFrame,
     field_exprs: dict,
-    field_kinds: list[tuple[str, str]],
     nlevels: dict[str, int],
     id_col: str = "rec_id",
     block_cols: list[str] | None = None,
     penalty: float | str = 0.0,
-    method: str = "hungarian",
 ) -> tuple[DataFrame, em.FSParams | None]:
     """Bipartite two-file linkage — the direct reference analog
     (vignette lifecycle, /root/reference/vignette/example.jl): candidate
     pairs (optionally key-blocked), comparison-vector dedup, EM m/u, FS
-    weights, CC decomposition, per-block one-to-one. Here the matching IS
-    the entity-cluster output (each record appears in at most one link).
+    weights, CC decomposition, per-block Hungarian one-to-one. Here the
+    matching IS the entity-cluster output (each record appears in at most
+    one link).
 
     df_a/df_b must expose id_col (string/long) plus the columns consumed by
-    field_exprs with _a/_b suffixes. Returns (links, params). Weights
-    always come from EM, so field_kinds is not read; it stays in the
-    positional signature its callers use.
+    field_exprs with _a/_b suffixes. Returns (links, params).
 
     penalty="bayes" sets the threshold to -logit(p_hat) from the EM match
     prevalence — link iff posterior match probability > 1/2, the
@@ -397,7 +398,7 @@ def link_two_sources(
         ),
     )
     links = assignment.one_to_one(
-        blocked.select("id_a", "id_b", "w", "block_id"), method=method
+        blocked.select("id_a", "id_b", "w", "block_id"), method="hungarian"
     )
     # map hashed node ids back to record ids
     links = (

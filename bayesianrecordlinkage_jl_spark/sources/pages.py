@@ -128,7 +128,6 @@ def extract_text(html: Column) -> Column:
     """html binary -> extracted body text, byte-identical to `text`.
 
     Deterministic extraction of the <article> body; pure Catalyst (decode +
-    regexp_extract), the trafilatura-style extraction slot. A pandas-UDF
-    variant lives in operators.multimodal for opaque formats."""
+    regexp_extract), the trafilatura-style extraction slot."""
     s = F.decode(html, "UTF-8")
     return F.regexp_extract(s, "<article>(.*)</article>", 1)

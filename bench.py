@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline linkage + training-data queries at
+"""Benchmark harness: headline linkage + near-dup, corpus-curation,
+similarity-search and windowed-aggregation catalog queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
@@ -171,7 +172,6 @@ def main() -> None:
         "one_to_one_links",
         "dedup_cluster_keep",
         "dup_span_stats",
-        "search_conjunctive",
         "decontamination",
         "repetition_stats",
         "frequency_caps",
@@ -183,11 +183,9 @@ def main() -> None:
         "latest_snapshots",
         "trustrank_hosts",
         "host_seed_distance",
-        "boilerplate_strip",
         "longest_dup_span",
         "host_language_profile",
         "salsa_hosts",
-        "token_budget_curriculum",
         "fs_review_queue",
         "host_triangles",
         "snm_pairs",
@@ -241,16 +239,11 @@ def main() -> None:
         "blocking_rule_selection",
         # round-4 session-3 additions
         "embedding_topk_pq",
-        "ngram_lm_scores",
         "scc_hosts",
         "wl_host_roles",
-        "bpe_merges",
-        "bpe_segment_stats",
-        "hybrid_search_rrf",
         "event_bursts",
         "event_props_stats",
         "k_anonymity_profile",
-        "corruption_augment",
         "embedding_topk_ivfpq",
         # round-5 additions
         "dedup_jaccard_prefix",

@@ -76,13 +76,9 @@ def main() -> None:
                 F.nullif(F.col("occup_b"), F.lit("NA")),
             ),
         }
-        kinds = [
-            ("g_gname", "lev"), ("g_fname", "lev"),
-            ("g_age", "exact"), ("g_occup", "exact"),
-        ]
         nlv = {"g_gname": 4, "g_fname": 4, "g_age": 2, "g_occup": 2}
         links, _params = link_two_sources(
-            spark, ra, rb, fexprs, kinds, nlv, block_cols=["gender"]
+            spark, ra, rb, fexprs, nlv, block_cols=["gender"]
         )
         n_links = links.count()
     finally:

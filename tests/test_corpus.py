@@ -1,8 +1,7 @@
 """Corpus-curation operators (operators/corpus.py): near-dup cluster
-canonicalization, duplicated-span stats, inverted-index search, BM25."""
+canonicalization, duplicated-span stats, decontamination, caps, packing."""
 
 import hashlib
-import math
 import re
 
 import numpy as np
@@ -231,74 +230,6 @@ def test_contamination_min_hits_threshold(docs):
     assert (hi["n_hits"] >= 0).all() and len(hi) == 7
 
 
-# ---------------------------------------------------------------------------
-# search
-# ---------------------------------------------------------------------------
-
-
-def test_conjunctive_search_bruteforce(docs):
-    queries = {1: ("spark", "window"), 2: ("customer", "table", "join")}
-    out = corpus.conjunctive_search_topk(
-        docs, "doc_id", "text", queries, k=10
-    ).toPandas()
-    pdf = docs.toPandas()
-    for qid, terms in queries.items():
-        exp = []
-        for _, r in pdf.iterrows():
-            toks = _tokens(r["text"])
-            if all(t in toks for t in terms):
-                exp.append((r["doc_id"], sum(toks.count(t) for t in terms)))
-        exp.sort(key=lambda x: (-x[1], x[0]))
-        got = out[out["query_id"] == qid].sort_values("rank")
-        assert list(got["doc_id"]) == [d for d, _ in exp]
-        assert list(got["score"]) == [s for _, s in exp]
-        assert list(got["rank"]) == list(range(1, len(exp) + 1))
-
-
-def test_conjunctive_requires_all_terms(docs):
-    # doc 3 has 'spark' and 'window' but not 'customer'
-    out = corpus.conjunctive_search_topk(
-        docs, "doc_id", "text", {9: ("spark", "customer")}, k=10
-    ).toPandas()
-    assert 3 not in set(out["doc_id"])
-
-
-def test_bm25_matches_numpy_replica(docs):
-    queries = {1: ("spark", "window", "customer")}
-    k1, b = 1.2, 0.75
-    out = (
-        corpus.bm25_topk(docs, "doc_id", "text", queries, k=10, k1=k1, b=b)
-        .toPandas()
-        .set_index("doc_id")
-    )
-    pdf = docs.toPandas()
-    toks = {r["doc_id"]: _tokens(r["text"]) for _, r in pdf.iterrows()}
-    n = len(pdf)
-    avgdl = float(np.mean([len(t) for t in toks.values()]))
-    dfreq = {
-        t: sum(1 for ts in toks.values() if t in ts) for t in queries[1]
-    }
-    exp = {}
-    for did, ts in toks.items():
-        s = 0.0
-        for t in queries[1]:
-            tf = ts.count(t)
-            if tf == 0 or dfreq[t] == 0:
-                continue
-            idf = math.log(1.0 + (n - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
-            s += idf * tf * (k1 + 1.0) / (
-                tf + k1 * (1.0 - b + b * len(ts) / avgdl)
-            )
-        if s > 0:
-            exp[did] = s
-    assert set(out.index) == set(exp)
-    for did, s in exp.items():
-        assert out.loc[did, "score"] == pytest.approx(s, rel=1e-12)
-    # ranking follows score desc
-    ranked = out.sort_values("rank")
-    assert (np.diff(ranked["score"].to_numpy()) <= 1e-15).all()
-
-
 def _phash(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
@@ -477,144 +408,6 @@ def test_curation_pipeline_invariants(spark):
 
 
 # ---------------------------------------------------------------------------
-# quality_classifier
-# ---------------------------------------------------------------------------
-
-
-def test_quality_classifier_bruteforce(docs):
-    w = corpus.classifier_weights()
-    out = {
-        r["doc_id"]: r
-        for r in corpus.quality_classifier(docs, "doc_id", "text").collect()
-    }
-    for row in docs.select("doc_id", "text").collect():
-        toks = _tokens(row["text"])
-        raw = sum(w[_phash(t) % corpus.QC_BUCKETS] for t in toks)
-        got = out[row["doc_id"]]
-        assert got["n_tokens"] == len(toks)
-        assert got["raw_score"] == raw
-        assert got["cls_score"] == raw / (8 * max(len(toks), 1))
-        assert got["keep"] == (raw >= 0)
-
-
-def test_quality_classifier_empty_text(spark):
-    d = spark.createDataFrame([(1, "!!! ???")], "doc_id long, text string")
-    row = corpus.quality_classifier(d, "doc_id", "text").collect()[0]
-    assert row["n_tokens"] == 0
-    assert row["raw_score"] == 0
-    assert row["cls_score"] == 0.0
-    assert row["keep"]
-
-
-# ---------------------------------------------------------------------------
-# mixture_sample
-# ---------------------------------------------------------------------------
-
-_RATES = {"a": 2.5, "b": 0.5, "c": 0.0}
-
-
-def _mix_copies(doc_id: int, rate: float) -> int:
-    r = int(round(rate * 4096))
-    bucket = _phash(f"mix:{doc_id}") % 4096
-    return r // 4096 + (1 if bucket < r % 4096 else 0)
-
-
-def test_mixture_sample_bruteforce(spark):
-    rows = [(i, "abcd"[i % 4]) for i in range(200)]  # 'd' takes the default
-    d = spark.createDataFrame(rows, "doc_id long, source string")
-    out = (
-        corpus.mixture_sample(d, "doc_id", "source", _RATES)
-        .groupBy("doc_id", "source")
-        .count()
-        .collect()
-    )
-    got = {r["doc_id"]: r["count"] for r in out}
-    for i, src in rows:
-        want = _mix_copies(i, _RATES.get(src, 1.0))
-        assert got.get(i, 0) == want, (i, src)
-    # epochs are 0..n-1 per doc
-    eps = (
-        corpus.mixture_sample(d, "doc_id", "source", _RATES)
-        .groupBy("doc_id")
-        .agg({"epoch": "min", "epoch": "max"})
-        .collect()
-    )
-    assert all(r[1] >= 0 for r in eps)
-
-
-def test_mixture_sample_stable_under_growth(spark):
-    small = spark.createDataFrame(
-        [(i, "a") for i in range(50)], "doc_id long, source string"
-    )
-    big = spark.createDataFrame(
-        [(i, "a") for i in range(150)], "doc_id long, source string"
-    )
-    f = lambda d: {
-        (r["doc_id"], r["epoch"])
-        for r in corpus.mixture_sample(d, "doc_id", "source", _RATES).collect()
-        if r["doc_id"] < 50
-    }
-    assert f(small) == f(big)
-
-
-# ---------------------------------------------------------------------------
-# PII redaction functions
-# ---------------------------------------------------------------------------
-
-
-def test_pii_redact_masks_and_counts(spark):
-    from bayesianrecordlinkage_jl_spark.functions import text as T
-    from pyspark.sql import functions as F
-
-    d = spark.createDataFrame(
-        [
-            (1, "write to jane.doe+x@mail.example.org or call 555-0199 now"),
-            (2, "no pii here at all"),
-            (3, "two mails a@b.io c@d.net and 555-1234 555-9999"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in d.select(
-            "doc_id",
-            T.pii_email_count(F.col("text")).alias("ne"),
-            T.pii_phone_count(F.col("text")).alias("np"),
-            T.pii_redact(F.col("text")).alias("red"),
-        ).collect()
-    }
-    assert out[1]["ne"] == 1 and out[1]["np"] == 1
-    assert out[1]["red"] == "write to <EMAIL> or call <PHONE> now"
-    assert out[2]["ne"] == 0 and out[2]["np"] == 0
-    assert out[2]["red"] == "no pii here at all"
-    assert out[3]["ne"] == 2 and out[3]["np"] == 2
-    assert "@" not in out[3]["red"] and "555-" not in out[3]["red"]
-
-
-# ---------------------------------------------------------------------------
-# vocabulary_topk
-# ---------------------------------------------------------------------------
-
-
-def test_vocabulary_topk_bruteforce(docs):
-    from collections import Counter
-
-    tf, df_ = Counter(), Counter()
-    for row in docs.select("text").collect():
-        toks = _tokens(row["text"])
-        tf.update(toks)
-        df_.update(set(toks))
-    want = sorted(tf, key=lambda t: (-tf[t], t))[:5]
-    got = corpus.vocabulary_topk(docs, "doc_id", "text", k=5).collect()
-    got = sorted(got, key=lambda r: r["rank"])
-    assert [r["term"] for r in got] == want
-    for r in got:
-        assert r["tf"] == tf[r["term"]]
-        assert r["df"] == df_[r["term"]]
-    assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
-
-
-# ---------------------------------------------------------------------------
 # split_decontamination
 # ---------------------------------------------------------------------------
 
@@ -644,54 +437,6 @@ def test_split_decontamination_bruteforce(docs):
     }
     assert got == want
     assert any(v[1] for v in want.values())  # the fixture must exercise hits
-
-
-def test_boilerplate_strip_semantics(spark):
-    K = corpus.BP_CHUNK_K
-    shared = " ".join(f"tpl{i}" for i in range(K))       # the template chunk
-    uniq = lambda tag: " ".join(f"{tag}{i}" for i in range(K))  # noqa: E731
-    rows = [
-        (1, shared + " " + uniq("a")),       # template first, unique second
-        (2, uniq("b") + " " + shared),       # unique first, template second
-        (3, uniq("c") + " " + uniq("d")),    # fully unique doc
-        (4, shared + " " + shared),          # ALL chunks are template
-        (5, uniq("e") + " " + uniq("e")),    # within-doc repeat only
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r
-        for r in corpus.boilerplate_strip(df, "doc_id", "text").collect()
-    }
-    assert got[1]["n_chunks"] == 2 and got[1]["dup_chunks"] == 1
-    assert got[1]["clean_text"] == uniq("a")
-    assert got[2]["clean_text"] == uniq("b")
-    assert got[3]["dup_chunks"] == 0
-    assert got[3]["clean_text"] == uniq("c") + " " + uniq("d")
-    # every chunk stripped -> empty string (not null)
-    assert got[4]["dup_chunks"] == 2 and got[4]["clean_text"] == ""
-    assert got[4]["dup_frac"] == 1.0
-    # within-document repetition alone is NOT boilerplate (min_docs=2
-    # counts DISTINCT documents)
-    assert got[5]["dup_chunks"] == 0
-    assert got[5]["clean_text"] == uniq("e") + " " + uniq("e")
-
-
-def test_boilerplate_strip_order_preserved(spark):
-    # chunks survive in document order even when duplicates interleave
-    K = corpus.BP_CHUNK_K
-    tpl = " ".join(f"t{i}" for i in range(K))
-    w = lambda tag: " ".join(f"{tag}{i}" for i in range(K))  # noqa: E731
-    rows = [
-        (1, " ".join([w("x"), tpl, w("y"), tpl, w("z")])),
-        (2, tpl),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r
-        for r in corpus.boilerplate_strip(df, "doc_id", "text").collect()
-    }
-    assert got[1]["n_chunks"] == 5 and got[1]["dup_chunks"] == 2
-    assert got[1]["clean_text"] == " ".join([w("x"), w("y"), w("z")])
 
 
 def test_longest_dup_span_bruteforce(docs):
@@ -763,36 +508,6 @@ def test_group_language_profile_replica(spark):
     assert got["h2"]["simpson"] == 1.0 and got["h2"]["top_lang"] == "fr"
     assert got["h3"]["top_lang"] == "de"  # tie broken lexicographically
     assert got["h3"]["simpson"] == (1 + 1) / 4.0
-
-
-def test_token_budget_select_take_while(spark):
-    # source s1 ranked by score desc: d1(100 tok), d2(big 900), d3(50).
-    # budget 200: d1 fits (cum 100), d2 overflows (cum 1000) -> the prefix
-    # STOPS; d3 is NOT backfilled even though it would fit. s2 independent.
-    rows = [
-        (1, "s1", 9, 100), (2, "s1", 8, 900), (3, "s1", 7, 50),
-        (4, "s2", 1, 150), (5, "s2", 0, 40),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, raw_score long, n_tokens long"
-    )
-    got = {
-        r["doc_id"]: r
-        for r in corpus.token_budget_select(df, 200).collect()
-    }
-    assert set(got) == {1, 4, 5}
-    assert got[1]["sel_rank"] == 1 and got[1]["cum_tokens"] == 100
-    assert got[4]["cum_tokens"] == 150 and got[5]["cum_tokens"] == 190
-
-
-def test_token_budget_select_tiebreak_by_id(spark):
-    # equal scores: smaller doc_id ranks first and takes the budget
-    rows = [(10, "s", 5, 80), (2, "s", 5, 80), (30, "s", 5, 80)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, raw_score long, n_tokens long"
-    )
-    got = corpus.token_budget_select(df, 160).collect()
-    assert sorted(r["doc_id"] for r in got) == [2, 10]
 
 
 # --- exact group quantiles ----------------------------------------------------
@@ -956,444 +671,3 @@ try:
 
 except ImportError:  # pragma: no cover
     pass
-
-
-def test_ngram_lm_scores(spark):
-    """Frozen-LM quality scoring: kernel/expression parity, a pure-Python
-    replica of the integer trigram sum, and the score's discriminative
-    direction (in-distribution text scores above out-of-distribution
-    noise)."""
-    import json
-    import os
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "bayesianrecordlinkage_jl_spark", "plans", "ngram_lm.json",
-    )
-    with open(path) as f:
-        model = json.load(f)
-    rows = [
-        (0, "key agg row scan slow fast table value part hash"),
-        (1, "zq"),                       # shorter than a trigram
-        (2, ""),                         # empty
-        (3, "xqzj vvkw qqpp zzzz unseen trigram soup xjq"),
-        (4, "the table join window query scan filter value"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    got = (
-        C_.ngram_lm_scores(df, "doc_id", "text", model)
-        .orderBy("doc_id").toPandas()
-    )
-    exp = (
-        C_.ngram_lm_scores(df, "doc_id", "text", model, impl="expr")
-        .orderBy("doc_id").toPandas()
-    )
-    assert got.equals(exp)
-    # pure-Python replica
-    sc, bo = model["scores"], model["backoff"]
-    for r in got.itertuples():
-        t = rows[r.doc_id][1]
-        n = max(len(t) - 2, 0)
-        want = sum(sc.get(t[i:i + 3], bo) for i in range(n))
-        assert r.n_tri == n and r.lm_score == want
-    import math
-
-    assert math.isnan(got.loc[1, "avg_score"]) or got.loc[1, "avg_score"] is None \
-        or got.loc[1, "avg_score"] != got.loc[1, "avg_score"]  # NULL -> NaN
-    # in-distribution text beats unseen-trigram soup
-    assert got.loc[0, "avg_score"] > got.loc[3, "avg_score"]
-    assert got.loc[4, "avg_score"] > got.loc[3, "avg_score"]
-
-
-def test_train_ngram_lm_determinism_and_charset(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    m1 = C_.train_ngram_lm(docs, "text", top_n=32)
-    m2 = C_.train_ngram_lm(docs.repartition(7), "text", top_n=32)
-    assert m1 == m2
-    import re
-
-    assert all(re.match(r"^[a-z0-9 ]{3}$", t) for t in m1["scores"])
-    assert m1["backoff"] < min(m1["scores"].values())
-
-
-def test_bpe_train_matches_sennrich_replica(spark):
-    """bpe_train's merges equal the classic dict-based BPE trainer
-    (leftmost greedy merge application, count-then-lex argmax) on a
-    hand corpus, including the back-to-back pair case ('a b a b' must
-    merge BOTH occurrences in one round)."""
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    texts = [
-        "low low low lower lowest",
-        "new newer newest west west",
-        "abab abab baba",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id: long, text: string"
-    )
-    got = [
-        (r["rank"], r["left_sym"], r["right_sym"], r["merged"], r["pair_count"])
-        for r in C_.bpe_train(df, "doc_id", "text", rounds=6).collect()
-    ]
-
-    # reference trainer (Sennrich et al. 2016, dict form)
-    import collections
-    import re
-
-    vocab = collections.Counter()
-    for t in texts:
-        for tok in re.findall(r"[a-z0-9]+", t.lower()):
-            vocab[tuple(tok)] += 1
-    want = []
-    for rnd in range(1, 7):
-        pairs = collections.Counter()
-        for sym, cnt in vocab.items():
-            for i in range(len(sym) - 1):
-                pairs[(sym[i], sym[i + 1])] += cnt
-        if not pairs:
-            break
-        (l, r), c = min(
-            pairs.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        want.append((rnd, l, r, l + r, c))
-        new_vocab = collections.Counter()
-        for sym, cnt in vocab.items():
-            out, i = [], 0
-            while i < len(sym):
-                if i + 1 < len(sym) and sym[i] == l and sym[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            new_vocab[tuple(out)] += cnt
-        vocab = new_vocab
-    assert got == want, (got, want)
-
-
-def test_bpe_train_determinism_and_short_tokens(spark):
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    df = spark.createDataFrame(
-        [(0, "a a a b bb"), (1, "c")], "doc_id: long, text: string"
-    )
-    a = C_.bpe_train(df.repartition(2), "doc_id", "text", rounds=3).collect()
-    b = C_.bpe_train(df.repartition(9), "doc_id", "text", rounds=3).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # single-char tokens contribute no pairs; 'bb' gives the only merge
-    assert a[0]["merged"] == "bb"
-
-
-def test_bpe_segment_stats_replica(spark):
-    """Frozen-merge replay equals a Python BPE application (leftmost
-    greedy per merge, in rank order), plus bound sanity."""
-    import json
-    import os
-    import re
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "bayesianrecordlinkage_jl_spark", "plans", "bpe_merges.json",
-    )
-    with open(path) as f:
-        merges = json.load(f)
-    texts = ["lower tables joined fast", "er er erer", "", "x"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id: long, text: string"
-    )
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["n_symbols"], r["n_chars"])
-        for r in C_.bpe_segment_stats(df, "doc_id", "text", merges).collect()
-    }
-
-    def apply_bpe(tok):
-        sym = list(tok)
-        for l, r in merges:
-            out, i = [], 0
-            while i < len(sym):
-                if i + 1 < len(sym) and sym[i] == l and sym[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            sym = out
-        return sym
-
-    for i, t in enumerate(texts):
-        toks = [x for x in re.split("[^a-z0-9]+", t.lower()) if x]
-        want = (
-            len(toks),
-            sum(len(apply_bpe(tok)) for tok in toks),
-            sum(len(tok) for tok in toks),
-        )
-        assert got[i] == want, (i, got[i], want)
-
-
-def test_hybrid_rrf_replica(spark):
-    """RRF fusion equals a Python replay over independently computed
-    lexical (tf dot) and semantic (cosine) rankings, including docs
-    present in only one ranking."""
-    import numpy as np
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = (
-        C_.hybrid_rrf_topk(
-            docs, emb, "doc_id", "text", "vec_id", "embedding", 5,
-            k_in=10, k_out=5,
-        )
-        .orderBy("query_id", "rank").toPandas()
-    )
-    # replica
-    import collections
-    import re
-
-    pdf = docs.select("doc_id", "text").toPandas()
-    toks = {
-        int(r.doc_id): collections.Counter(
-            t for t in re.split("[^a-z0-9]+", r.text.lower()) if t
-        )
-        for r in pdf.itertuples()
-    }
-    epdf = emb.select("vec_id", "embedding").toPandas()
-    vecs = {
-        int(r.vec_id): np.asarray(r.embedding, dtype=np.float64)
-        for r in epdf.itertuples()
-    }
-    rows = []
-    for q in range(5):
-        lex = []
-        for d, c in toks.items():
-            if d == q:
-                continue
-            s = sum(c[t] * toks[q][t] for t in toks[q])
-            if s > 0:
-                lex.append((d, s))
-        lex.sort(key=lambda x: (-x[1], x[0]))
-        lex_rank = {d: i + 1 for i, (d, _) in enumerate(lex[:10])}
-        sem = []
-        for d, v in vecs.items():
-            if d == q:
-                continue
-            qv = vecs[q]
-            sim = float(qv @ v / (np.linalg.norm(qv) * np.linalg.norm(v)))
-            sem.append((d, sim))
-        sem.sort(key=lambda x: (-x[1], x[0]))
-        sem_rank = {d: i + 1 for i, (d, _) in enumerate(sem[:10])}
-        fused = {}
-        for d in set(lex_rank) | set(sem_rank):
-            s = 0
-            if d in lex_rank:
-                s += 1_000_000 // (60 + lex_rank[d])
-            if d in sem_rank:
-                s += 1_000_000 // (60 + sem_rank[d])
-            fused[d] = s
-        ranked = sorted(fused.items(), key=lambda x: (-x[1], x[0]))[:5]
-        for i, (d, s) in enumerate(ranked):
-            rows.append(
-                (q, d, lex_rank.get(d, 0), sem_rank.get(d, 0), s, i + 1)
-            )
-    want = rows
-    have = [tuple(int(x) for x in r) for r in got.itertuples(index=False)]
-    assert have == want
-
-
-def test_corruption_augment_replica_and_properties(spark):
-    """Python replica of the hash channel; edit-rate ~pct on letters;
-    non-letters untouched; deterministic; substitution never preserves
-    the character."""
-    import hashlib
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    rows = [(0, "abc xyz 123 hello"), (1, ""), (2, "zz zz zz zz zz")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["text_aug"], r["n_edits"])
-        for r in C_.corruption_augment(df, "doc_id", "text").collect()
-    }
-
-    def ph(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    for did, text in rows:
-        out = []
-        edits = 0
-        for i, ch in enumerate(text, start=1):
-            h = ph(f"{C_.CORRUPT_SALT}:{did}:{i}")
-            if "a" <= ch <= "z" and h % 100 < C_.CORRUPT_PCT:
-                nc = chr(97 + (ord(ch) - 97 + 1 + h % 25) % 26)
-                assert nc != ch
-                out.append(nc)
-                edits += 1
-            else:
-                out.append(ch)
-        assert got[did] == ("".join(out), edits), did
-    # non-letters and empties never edited
-    assert got[1] == ("", 0)
-    aug0 = got[0][0]
-    assert aug0[3] == " " and aug0[7] == " " and aug0[8:11] == "123"
-
-
-def test_corruption_kernel_matches_expression(spark):
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = (
-        C_.corruption_augment(docs, "doc_id", "text")
-        .orderBy("doc_id").toPandas()
-    )
-    e = (
-        C_.corruption_augment(docs, "doc_id", "text", impl="expr")
-        .orderBy("doc_id").toPandas()
-    )
-    assert a.equals(e)
-
-
-def test_winnowing_replica_and_guarantee(spark):
-    """Kernel vs expression parity; a pure-Python winnowing replica; and
-    the MOSS guarantee: two docs sharing a substring of length k+w-1
-    share at least one fingerprint."""
-    import hashlib
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    shared = "the quick brown fox jumps over it"  # >= k+w-1 = 11 chars
-    texts = [
-        (0, "aaa " + shared + " tail one"),
-        (1, "prefix two " + shared + " zzz"),
-        (2, "completely unrelated text body"),
-        (3, "short"),  # below k
-    ]
-    df = spark.createDataFrame(texts, "doc_id long, text string")
-    a = (
-        C_.winnowing_fingerprints(df, "doc_id", "text")
-        .orderBy("doc_id", "pos").toPandas()
-    )
-    e = (
-        C_.winnowing_fingerprints(df, "doc_id", "text", impl="expr")
-        .orderBy("doc_id", "pos").toPandas()
-    )
-    assert a.reset_index(drop=True).equals(e.reset_index(drop=True))
-
-    def replica(t, k=C_.WINNOW_K, w=C_.WINNOW_W):
-        n = len(t) - k + 1
-        if n < w:
-            return set()
-        gh = [
-            int(hashlib.md5(t[i:i + k].encode()).hexdigest()[:15], 16)
-            for i in range(n)
-        ]
-        sel = set()
-        for j in range(n - w + 1):
-            win = gh[j:j + w]
-            m = min(win)
-            rp = max(i for i in range(w) if win[i] == m)
-            sel.add((j + rp + 1, gh[j + rp]))
-        return sel
-
-    for did, t in texts:
-        got = {
-            (r.pos, r.fp) for r in a[a.doc_id == did].itertuples()
-        }
-        assert got == replica(t), did
-    # guarantee: docs 0 and 1 share a fingerprint HASH; doc 3 has none
-    f0 = set(a[a.doc_id == 0].fp)
-    f1 = set(a[a.doc_id == 1].fp)
-    assert f0 & f1
-    assert len(a[a.doc_id == 3]) == 0
-
-
-def test_winnowing_overlap_pairs(spark):
-    """Two docs sharing a long passage pair up; unrelated docs don't; a
-    fingerprint repeated WITHIN one doc counts once (distinct-before-
-    join); determinism under partitioning."""
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    passage = "records linked by shared winnowing fingerprints survive"
-    rows = [
-        (0, "intro " + passage + " outro"),
-        (1, passage + " moved elsewhere entirely"),
-        (2, "totally different content with no overlap at all here"),
-        (3, "dup dup " + passage + " " + passage),  # internal repetition
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["id_a"], r["id_b"]): r["n_shared_fp"]
-        for r in C_.winnowing_overlap_pairs(df, "doc_id", "text").collect()
-    }
-    assert (0, 1) in got and (0, 3) in got and (1, 3) in got
-    assert not any(2 in p for p in got)
-    # internal repetition must not inflate the pair count beyond the
-    # distinct shared-hash count
-    fps = C_.winnowing_fingerprints(df, "doc_id", "text").toPandas()
-    f0 = set(fps[fps.doc_id == 0].fp)
-    f3 = set(fps[fps.doc_id == 3].fp)
-    assert got[(0, 3)] == len(f0 & f3)
-    a = sorted(
-        map(tuple, C_.winnowing_overlap_pairs(
-            df.repartition(3), "doc_id", "text").collect())
-    )
-    b = sorted(
-        map(tuple, C_.winnowing_overlap_pairs(
-            df.repartition(11), "doc_id", "text").collect())
-    )
-    assert a == b
-
-
-# ---------------------------------------------------------------------------
-# Round-5 ADVICE regressions (empty-text SQL parity / empty-charset corpus)
-# ---------------------------------------------------------------------------
-
-
-def test_corruption_sql_empty_text_cross_engine(spark):
-    """Empty-text documents: DuckDB's list_aggr returns NULL on an empty
-    list where Spark's array_join returns '' — the twin must coalesce so
-    both engines emit ('', 0) (the r4 latent parity break; fixture min
-    text length never hit it)."""
-    import duckdb
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    rows = [(0, ""), (1, "abc"), (2, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["text_aug"], r["n_edits"])
-        for r in C_.corruption_augment(df, "doc_id", "text").collect()
-    }
-    con = duckdb.connect()
-    con.execute("CREATE TABLE ca_docs (doc_id BIGINT, text VARCHAR)")
-    for did, t in rows:
-        con.execute("INSERT INTO ca_docs VALUES (?, ?)", [did, t])
-    sql_out = {
-        did: (ta, int(ne))
-        for did, ta, ne in con.execute(
-            C_.corruption_augment_sql("ca_docs", "doc_id", "text")
-        ).fetchall()
-    }
-    assert got == sql_out
-    assert got[0] == ("", 0) and got[2] == ("", 0)
-
-
-def test_train_ngram_lm_unsafe_corpus_raises(spark):
-    """A corpus with no [a-z0-9 ] trigrams (non-ASCII / too short) must
-    raise a clear ValueError, not ValueError from min() on an empty
-    sequence (the r4 crash)."""
-    import pytest as _pytest
-
-    from bayesianrecordlinkage_jl_spark.operators import corpus as C_
-
-    df = spark.createDataFrame(
-        [(0, "ÄÖÜ ßßß"), (1, "ab")], "doc_id long, text string"
-    )
-    with _pytest.raises(ValueError, match="safe charset"):
-        C_.train_ngram_lm(df, "text")

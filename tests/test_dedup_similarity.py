@@ -1,11 +1,11 @@
-"""Dedup suite + similarity search + multimodal plumbing + streaming ingest."""
+"""Dedup suite + similarity search + streaming ingest."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from bayesianrecordlinkage_jl_spark.operators import dedup, multimodal, similarity
+from bayesianrecordlinkage_jl_spark.operators import dedup, similarity
 
 
 @pytest.fixture(scope="module")
@@ -432,57 +432,6 @@ def test_ivf_topk_recall_and_determinism(spark):
             assert s == bsim.loc[(qq, it)]
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.synthesize_media(spark, n=24)
-    fcols = [f"f{k}" for k in range(8)]
-    feats = multimodal.extract_features(media, dim=8).toPandas()
-    assert len(feats) == 24
-    assert set(fcols) <= set(feats.columns)
-    # features are an L1-normalized histogram
-    assert np.allclose(feats[fcols].sum(axis=1), 1.0)
-    assert (feats["n_bytes"] > 0).all()
-    # deterministic: same payload -> same feature, bit-exact
-    again = multimodal.extract_features(media, dim=8).toPandas()
-    a = feats.sort_values("media_id").reset_index(drop=True)
-    b = again.sort_values("media_id").reset_index(drop=True)
-    assert (a[fcols].to_numpy() == b[fcols].to_numpy()).all()
-    frames = multimodal.frame_sample_plan(media, every_ms=10_000).toPandas()
-    assert (frames["frame_ts_ms"] % 10_000 == 0).all()
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"xx")  # real decoder rejects non-PNG
-    # the synthesized payloads are REAL media: decode one of each locally
-    rows = {r["media_id"]: r for r in media.where("media_id < 2").collect()}
-    px = multimodal.decode_image(bytes(rows[0]["payload"]))
-    assert px.shape == (rows[0]["height"], rows[0]["width"])
-    assert (px == multimodal._img_pixels(0)).all()
-    pcm = multimodal.decode_audio(bytes(rows[1]["payload"]))
-    assert (pcm == multimodal._audio_samples(1)).all()
-
-
-def test_multimodal_oracle_bit_parity(spark):
-    """The DuckDB byte-histogram oracle reproduces extract_features bit-exactly
-    (the driver's value-hash gate for multimodal_features)."""
-    import duckdb
-
-    media = multimodal.synthesize_media(spark, n=64)
-    got = (
-        multimodal.extract_features(media, dim=8)
-        .toPandas()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        duckdb.sql(multimodal.features_oracle_sql(n=64, dim=8, payload_bytes=256))
-        .df()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    cols = sorted(got.columns)
-    assert sorted(want.columns) == cols
-    for c in cols:
-        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
-
-
 def test_streaming_ingest(spark, tmp_path):
     from bayesianrecordlinkage_jl_spark.sources.pages import generate_pages
     from bayesianrecordlinkage_jl_spark.streaming import ingest
@@ -537,33 +486,6 @@ def test_train_centroids_distributed(spark):
     bf_pairs = set(zip(bf["query_id"], bf["item_id"]))
     ivf_pairs = set(zip(ivf["query_id"], ivf["item_id"]))
     assert len(ivf_pairs & bf_pairs) / len(bf_pairs) >= 0.8
-
-
-def test_sampled_frame_features(spark):
-    """Video frame pipeline: sampled frames decode to the formula pixels
-    (container seek + PNG decode), timestamps clamp to the last frame, and
-    features are exact dyadic histograms."""
-    from bayesianrecordlinkage_jl_spark.operators import multimodal as MM
-
-    vids = MM.synthesize_videos(spark, n=12)
-    out = MM.sampled_frame_features(vids, every_ms=500, dim=8).toPandas()
-    meta = vids.select("media_id", "n_frames", "width", "height").toPandas()
-    meta = meta.set_index("media_id")
-    for r in out.itertuples():
-        nf = int(meta.loc[r.media_id, "n_frames"])
-        w = int(meta.loc[r.media_id, "width"])
-        h = int(meta.loc[r.media_id, "height"])
-        assert r.n_pixels == w * h
-        fidx = min(int(r.frame_ts_ms) // MM.FRAME_MS, nf - 1)
-        px = MM._frame_pixels(int(r.media_id), fidx).ravel()
-        want = np.bincount(px % 8, minlength=8) / px.size
-        got = np.array([getattr(r, f"f{k}") for k in range(8)])
-        assert np.array_equal(got, want), (r.media_id, r.frame_ts_ms)
-    # every video contributes duration//500 + 1 sampled frames
-    counts = out.groupby("media_id").size()
-    for mid, c in counts.items():
-        nf = int(meta.loc[mid, "n_frames"])
-        assert c == (nf * MM.FRAME_MS) // 500 + 1
 
 
 # --- containment (asymmetric near-dup) -------------------------------------

@@ -31,21 +31,15 @@ QUERIES = [
     "dedup_embedding_cosine",
     "one_to_one_links",
     "exact_posterior_links",
-    "multimodal_frame_features",
     "phonetic_keys",
     "dedup_cluster_keep",
     "dup_span_stats",
-    "search_conjunctive",
     "decontamination",
     "repetition_stats",
     "corpus_splits",
     "frequency_caps",
     "packed_sequences",
     "curation_pipeline",
-    "quality_classifier",
-    "mixture_sample",
-    "pii_redaction",
-    "vocabulary_topk",
     "split_decontamination",
     "extract_links",
     "host_link_graph",
@@ -57,18 +51,15 @@ QUERIES = [
     "crawl_delta",
     "blocking_quality",
     "dedup_containment",
-    "host_reputation",
     "link_increment",
     "incremental_components",
     "cluster_metrics",
     "bloom_decontamination",
     "trustrank_hosts",
     "host_seed_distance",
-    "boilerplate_strip",
     "longest_dup_span",
     "host_language_profile",
     "salsa_hosts",
-    "token_budget_curriculum",
     "fs_decision_counts",
     "fs_review_queue",
     "host_triangles",

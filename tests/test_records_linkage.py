@@ -21,7 +21,6 @@ def field_exprs():
             F.nullif(F.col("occup_b"), F.lit("NA")),
         ),
     }
-FIELD_KINDS = [("g_gname", "lev"), ("g_fname", "lev"), ("g_age", "exact"), ("g_occup", "exact")]
 NLEVELS = {"g_gname": 4, "g_fname": 4, "g_age": 2, "g_occup": 2}
 
 
@@ -50,11 +49,9 @@ def test_two_source_linkage_f1(spark, records):
         a.drop("i"),
         b.drop("i"),
         field_exprs(),
-        FIELD_KINDS,
         NLEVELS,
         id_col="rec_id",
         penalty=0.0,
-        method="hungarian",
     )
     got = links.select("rid_a", "rid_b").toPandas()
     # one-to-one

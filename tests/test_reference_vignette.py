@@ -37,7 +37,6 @@ def _field_exprs():
     }
 
 
-KINDS = [("g_gname", "lev"), ("g_fname", "lev"), ("g_age", "exact"), ("g_occup", "exact")]
 NLEVELS = {"g_gname": 4, "g_fname": 4, "g_age": 2, "g_occup": 2}
 
 
@@ -46,7 +45,7 @@ def test_vignette_data_linkage(spark):
     b = read_tab_records(spark, f"{DATA}/dataB.txt")
     assert a.count() == 600 and b.count() == 600
     links, params = link_two_sources(
-        spark, a, b, _field_exprs(), KINDS, NLEVELS, id_col="id", penalty="bayes"
+        spark, a, b, _field_exprs(), NLEVELS, id_col="id", penalty="bayes"
     )
     got = {(r["rid_a"], r["rid_b"]) for r in links.collect()}
     truth = {(f"{i:03d}", f"{i:03d}") for i in range(300)}
@@ -171,7 +170,7 @@ def test_vignette_reference_posterior_bayes_estimate(spark):
 
     # (1) our MAP pipeline beats it against truth on the same fixture
     links, _ = link_two_sources(
-        spark, a, b, _field_exprs(), KINDS, NLEVELS, id_col="id",
+        spark, a, b, _field_exprs(), NLEVELS, id_col="id",
         penalty="bayes",
     )
     ours = {(r["rid_a"], r["rid_b"]) for r in links.collect()}
