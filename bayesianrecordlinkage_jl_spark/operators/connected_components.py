@@ -6,7 +6,9 @@ iterative variants (:294-489). The reference BFS is single-machine and
 queue-based; here we use the Kiveris et al. (2014) alternating large-star /
 small-star algorithm — O(log n) rounds of shuffle joins, the standard
 distributed formulation — with localCheckpoint per round to truncate
-lineage and convergence detected by an edge-set-stability count.
+lineage and convergence detected by a star-forest test (every leaf has one
+centre, no centre is a leaf), which stops at the first iteration whose
+output no further iteration would change.
 
 Node ids are bigint. For bipartite graphs callers encode sides disjointly
 (the two-source pipeline hashes ids with side-distinct prefixes —
@@ -77,6 +79,30 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the canonical edge set (src > dst, distinct) is a star
+    forest: every leaf (src) has exactly one centre (dst) and no centre is
+    itself a leaf. ONE aggregate job. At that state a centre is the min of
+    its star, and a further large-star + small-star iteration returns the
+    same edges, so the labels are final."""
+    roles = edges.select(
+        F.col("src").alias("node"), F.lit(1).alias("leaf"), F.lit(0).alias("centre")
+    ).unionByName(
+        edges.select(
+            F.col("dst").alias("node"), F.lit(0).alias("leaf"), F.lit(1).alias("centre")
+        )
+    )
+    per = roles.groupBy("node").agg(
+        F.sum("leaf").alias("leaf"), F.max("centre").alias("centre")
+    )
+    bad = per.agg(
+        F.count(
+            F.when((F.col("leaf") > 1) | ((F.col("leaf") > 0) & (F.col("centre") > 0)), 1)
+        ).alias("bad")
+    ).collect()[0]["bad"]
+    return bad == 0
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -85,40 +111,34 @@ def connected_components(
 ) -> DataFrame:
     """-> DataFrame(node bigint, component bigint); component = min node id.
 
+    Iterates large-star + small-star until the edges form a star forest
+    (_is_star_forest, one aggregate per iteration); raises RuntimeError
+    when max_iter iterations do not get there, rather than returning
+    unconverged labels.
+
     Isolated nodes don't appear (no edges) — callers union them back with
     component = own id (matching the reference's label-0-isolated
     convention, /root/reference/src/clustering_functions.jl:30).
     """
-    def _sig(df: DataFrame) -> tuple:
-        """Edge-set signature in ONE map-side aggregate (count + order-
-        insensitive hash sum) — convergence check without the full-shuffle
-        exceptAll comparison, which would dominate at scale."""
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.col("src"), F.col("dst")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
     e = _canon(
         edges.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst"))
     ).localCheckpoint()
-    sig = _sig(e)
     for _ in range(max_iter):
         # small-star output is already canonical + distinct
-        e2 = _small_star(_large_star(e)).localCheckpoint()
-        sig2 = _sig(e2)
-        e = e2
-        if sig2 == sig:
+        e = _small_star(_large_star(e)).localCheckpoint()
+        if _is_star_forest(e):
             break
-        sig = sig2
-    # at fixpoint every edge is (node, root)
+    else:
+        raise RuntimeError(
+            f"connected_components: no star forest after max_iter={max_iter} iterations"
+        )
+    # at a star forest every edge is (leaf, centre), centre = min node of
+    # the component, and no node is both: each node appears exactly once
     comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = e.select(F.col("dst").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-    return comp.union(roots).groupBy("node").agg(F.min("component").alias("component"))
+    return comp.unionByName(roots)
 
 
 def components_with_isolated(
@@ -147,16 +167,6 @@ def _nodes(edges: DataFrame) -> DataFrame:
     )
 
 
-def _flush(edges: DataFrame, t: float, flag: str) -> DataFrame:
-    """Components still to split, flagged `flag` = true (incl. nodes
-    isolated at threshold t). t must be the threshold the split check was
-    MEASURED at — flushing one incr higher would fragment components and
-    mislabel pieces that already pass the check as flagged."""
-    return components_with_isolated(
-        edges.where(F.col("w") > t), _nodes(edges)
-    ).select("node", "component", F.lit(True).alias(flag))
-
-
 def _threshold_split(
     weighted_edges: DataFrame,
     to_split,
@@ -176,56 +186,65 @@ def _threshold_split(
 
     to_split(above, cc) -> DataFrame(component): the component ids of cc
     that must split again, given the round's above-threshold edges.
-    Returns (node, component, flag).
+    Returns (node, component, flag). max_rounds must be >= 1.
+
+    The leftovers are the last round's components still to split, with the
+    labels that round's CC already computed: the restricted edges above
+    the MEASURED threshold are exactly that round's above-threshold edges
+    inside those components, so re-clustering them would return the same
+    labels (and clustering one incr higher would fragment components that
+    already pass the check).
 
     incr granularity contract: a raise that would drop NO active edge
-    declares the block unsplittable and flushes it flagged — pick incr fine
+    declares the block unsplittable and emits it flagged — pick incr fine
     enough that each raise crosses at least one remaining edge weight, or
     accept the flag as "no progress at this schedule".
 
-    Per round: the CC passes plus six Spark actions (isolated, to-split and
-    ok checkpoints, the emptiness probe, the restricted-edge checkpoint and
-    one scalar aggregate).
+    Per round: one CC pass plus six Spark actions (the cc, to-split and
+    isolated-plus-ok checkpoints, the emptiness probe, the restricted-edge
+    checkpoint and one scalar aggregate).
     """
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     active = weighted_edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long"), F.col("w")
     ).localCheckpoint()
     done_parts: list[DataFrame] = []
     cur_t = threshold
-    # threshold at which the most recent split check was evaluated
-    # (cur_t gets raised at the END of each round, so on max_rounds
-    # exhaustion cur_t is one incr above the measured level)
-    measured_t = cur_t
     for _ in range(max_rounds):
-        measured_t = cur_t
         above = active.where(F.col("w") > cur_t)
-        cc = connected_components(above)
+        # consumed by isolated / to_split / ok / over
+        cc = connected_components(above).localCheckpoint()
+        # tiny (<= #components rows); consumed by ok / over / the probe
+        dirty = to_split(above, cc).localCheckpoint()
         # nodes whose every edge fell below the raised threshold become
         # singletons NOW — without this they appear in no component and
         # vanish from the output
         isolated = _nodes(active).join(cc, on="node", how="left_anti").select(
-            "node", F.col("node").alias("component"), F.lit(False).alias(flag)
+            "node", F.col("node").alias("component")
         )
-        done_parts.append(isolated.localCheckpoint())
-        # tiny (<= #components rows); consumed by ok / over / the probe
-        dirty = to_split(above, cc).localCheckpoint()
         ok = cc.join(dirty, on="component", how="left_anti").select(
-            "node", "component", F.lit(False).alias(flag)
+            "node", "component"
         )
-        done_parts.append(ok.localCheckpoint())
+        done_parts.append(
+            isolated.unionByName(ok)
+            .withColumn(flag, F.lit(False))
+            .localCheckpoint()
+        )
         # a dirty component always has nodes, so probing the checkpointed
         # component set replaces a node-level probe
         if dirty.limit(1).count() == 0:
-            break
-        over = cc.join(dirty, on="component", how="left_semi").select("node")
+            return functools.reduce(DataFrame.unionByName, done_parts)
+        over = cc.join(dirty, on="component", how="left_semi")
         # restrict to edges with BOTH endpoints inside dirty components
         # (a src-only restriction leaks below-threshold edges into nodes
         # already emitted, double-counting them next round)
+        nodes_over = over.select("node")
         active = (
             active.join(
-                over.withColumnRenamed("node", "src"), on="src", how="left_semi"
+                nodes_over.withColumnRenamed("node", "src"), on="src", how="left_semi"
             )
-            .join(over.withColumnRenamed("node", "dst"), on="dst", how="left_semi")
+            .join(nodes_over.withColumnRenamed("node", "dst"), on="dst", how="left_semi")
             .localCheckpoint()
         )
         new_t = cur_t + incr
@@ -239,14 +258,11 @@ def _threshold_split(
             F.count(F.when(F.col("w") <= cur_t, 1)).alias("below"),
         ).collect()[0]
         if row["drop_next"] == 0 and row["below"] == 0:
-            done_parts.append(_flush(active, cur_t, flag))
             break
         cur_t = new_t
-    else:
-        # max_rounds exhausted with dirty components still active: flush
-        # them flagged rather than dropping their nodes from the output, at
-        # the threshold the final split check actually used
-        done_parts.append(_flush(active, measured_t, flag))
+    # stuck, or max_rounds exhausted: the components still to split leave
+    # flagged, labeled at the threshold their split check was measured at
+    done_parts.append(over.select("node", "component", F.lit(True).alias(flag)))
     return functools.reduce(DataFrame.unionByName, done_parts)
 
 

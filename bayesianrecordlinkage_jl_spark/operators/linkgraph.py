@@ -1168,7 +1168,7 @@ def hits_hosts_sql(
 
 def _scc_sig(df: DataFrame) -> tuple:
     """Label-table signature in one map-side aggregate (count + order-
-    insensitive hash sum) — the connected_components convergence idiom."""
+    insensitive hash sum)."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -1248,10 +1248,9 @@ def scc_hosts(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
 
     Scale shape: every primitive is a node-keyed equi-join or map-side-
     combined min aggregate over (host, label) rows — edges never carry
-    payload, nothing driver-side but convergence signatures (the
-    connected_components idiom). Rounds are data-dependent, as for any
-    iterative graph fixpoint (documented cap, same caveat as
-    connected_components' max_iter).
+    payload, nothing driver-side but convergence signatures. Rounds are
+    data-dependent, as for any iterative graph fixpoint (documented cap,
+    same caveat as connected_components' max_iter).
 
     Cost on deep graphs: each COLOR/RESOLVE pass (_min_label_fixpoint)
     takes O(diameter) rounds — one edge->label join plus one label

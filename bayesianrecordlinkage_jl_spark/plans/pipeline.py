@@ -253,14 +253,16 @@ def run_linkage(
             F.col("toks").alias("toks_b"),
             F.col("lang").alias("lang_b"),
         )
-        n_part = spark.sparkContext.defaultParallelism * 2
-        # pairs are byte-small but comparator-heavy per row; repartition
-        # UPSTREAM of the field joins (downstream weight filters get pushed
-        # into the join stage, so a post-join repartition would be bypassed)
+        # pairs are byte-small but comparator-heavy per row: AQE would
+        # coalesce the joined pairs to one partition, so the comparator
+        # projection (in _score_vectors, behind its checkpoint) would run
+        # as one task. A round-robin repartition after the joins spreads it
+        # over every core; a hash repartition on (id_a, id_b) here is
+        # coalesced to one task as well.
         return (
-            cand.repartition(n_part, "id_a", "id_b")
-            .join(fa, "id_a")
+            cand.join(fa, "id_a")
             .join(fb, "id_b")
+            .repartition(spark.sparkContext.defaultParallelism * 2)
         )
 
     summary = ComparisonSummary.build(

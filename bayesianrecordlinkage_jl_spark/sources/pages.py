@@ -18,7 +18,6 @@ must reproduce `text` byte-identically per url (pytest-asserted).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.text import phash

@@ -63,6 +63,19 @@ def test_chain_and_star(spark):
     assert set(_run_cc(spark, star).values()) == {0}
 
 
+def test_cc_raises_when_max_iter_runs_out(spark):
+    """A 40-node chain is not a star forest after one large-star +
+    small-star iteration: max_iter=1 must fail loudly, not return
+    unconverged labels."""
+    chain = spark.createDataFrame(
+        pd.DataFrame([(i, i + 1) for i in range(40)], columns=["src", "dst"])
+    )
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(chain, max_iter=1)
+    out = connected_components(chain).toPandas()
+    assert set(out["component"]) == {0} and len(out) == 41
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_property_vs_union_find(spark, seed):
     rng = random.Random(seed)

@@ -5,7 +5,6 @@ driver helpers (minimum_margin, one-hot counts, get_mids)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from bayesianrecordlinkage_jl_spark.operators import em, linkmatrix
 from bayesianrecordlinkage_jl_spark.operators.connected_components import (
@@ -156,6 +155,39 @@ def test_size_capped_exhaustion_flushes_at_measured_threshold(spark):
     # {2,3,4,5} stays ONE capped component (measured state at t=.01)
     assert comp[2] == comp[3] == comp[4] == comp[5]
     assert capped[2] and capped[3] and capped[4] and capped[5]
+
+
+def test_size_capped_stuck_round_runs_one_cc_pass(spark, monkeypatch):
+    """An oversized clique that is unsplittable at round 1 costs exactly
+    one CC pass: its flagged leftovers reuse the round's labels instead of
+    re-clustering the restricted edges."""
+    from bayesianrecordlinkage_jl_spark.operators import connected_components as ccm
+
+    calls = []
+    orig = ccm.connected_components
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(ccm, "connected_components", counting)
+    rows = [(i, j, 1.0) for i in range(6) for j in range(6) if i < j]
+    rows.append((10, 11, 1.0))
+    edges = spark.createDataFrame(pd.DataFrame(rows, columns=["src", "dst", "w"]))
+    out = size_capped_components(
+        edges, max_pairs=5, threshold=0.0, incr=0.5
+    ).toPandas()
+    assert len(calls) == 1
+    got = {(int(r.node), int(r.component), bool(r.capped)) for r in out.itertuples()}
+    assert got == {(i, 0, True) for i in range(6)} | {(10, 10, False), (11, 10, False)}
+
+
+def test_size_capped_rejects_max_rounds_below_one(spark):
+    edges = spark.createDataFrame(
+        pd.DataFrame([(1, 2, 1.0)], columns=["src", "dst", "w"])
+    )
+    with pytest.raises(ValueError, match="max_rounds"):
+        size_capped_components(edges, max_pairs=5, max_rounds=0)
 
 
 # --- threshold-split replica; cannot-link components (cluster repair) -----

@@ -4,8 +4,6 @@ column pruning + filter pushdown, and the single-Exchange scoring barrier.
 A plan regression here silently multiplies comparator cost at scale even
 though results stay correct."""
 
-import pytest
-
 from bayesianrecordlinkage_jl_spark.plans import oracle_queries as oq
 
 SF = "/root/testdata/sf0.001"
@@ -76,6 +74,45 @@ def test_weight_filter_does_not_reinline_comparators(spark):
     df = oq._scored_pairs_spark(spark, SF).where(F.col("w") > 0)
     opt = _optimized(df)
     assert opt.count("levenshtein") == 1, opt
+
+
+def test_run_linkage_comparators_run_on_every_core(spark, monkeypatch):
+    """run_linkage's comparator projection sits directly above a
+    round-robin exchange of defaultParallelism * 2 partitions (AQE
+    coalesces the post-join shuffle of the byte-small pairs to one task
+    otherwise), and levenshtein still appears exactly once. The plan is
+    captured at the score-vector localCheckpoint and the run stops there."""
+    from bayesianrecordlinkage_jl_spark.plans.pipeline import run_linkage
+    from bayesianrecordlinkage_jl_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, n_clusters=30, seed=5).drop("cluster_id", "host")
+    frame_cls = type(pages)
+    orig = frame_cls.localCheckpoint
+    plans = []
+
+    class _Captured(Exception):
+        pass
+
+    def spy(self, *a, **kw):
+        plan = _plan(self)
+        if "levenshtein" in plan:
+            plans.append(plan)
+            raise _Captured
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    try:
+        run_linkage(spark, pages)
+    except _Captured:
+        pass
+    assert len(plans) == 1
+    lines = plans[0].splitlines()
+    lev = [i for i, line in enumerate(lines) if "levenshtein" in line]
+    assert len(lev) == 1, plans[0]
+    assert "Project" in lines[lev[0]]
+    below = next(line for line in lines[lev[0] + 1:] if "Exchange" in line)
+    n_part = spark.sparkContext.defaultParallelism * 2
+    assert f"Exchange RoundRobinPartitioning({n_part})" in below, plans[0]
 
 
 def test_mutual_best_aggregates_before_shuffle(spark):

@@ -4,8 +4,6 @@ the contract edges the catalog fixture never hits."""
 
 import pandas as pd
 
-from pyspark.sql import functions as F
-
 from bayesianrecordlinkage_jl_spark.operators import corpus, crawl
 from bayesianrecordlinkage_jl_spark.operators.connected_components import (
     max_spanning_forest, star_clusters,
