@@ -116,14 +116,6 @@ def minhash_from_hashes_sql(hs: str, seed: int) -> str:
     return f"list_min(list_transform({hs}, h -> ({a} * h + {b}) % {MH_PRIME}))"
 
 
-def minhash_col(text: Column, seed: int, k: int = 3) -> Column:
-    return minhash_from_hashes(shingle_hashes(text, k), seed)
-
-
-def minhash_col_sql(text: str, seed: int, k: int = 3) -> str:
-    return minhash_from_hashes_sql(shingle_hashes_sql(text, k), seed)
-
-
 def band_key_from_hashes(hs: Column, band: int, rows_per_band: int = 2) -> Column:
     """LSH band key from a precomputed shingle-hash array column."""
     parts = [
@@ -139,16 +131,6 @@ def band_key_from_hashes_sql(hs: str, band: int, rows_per_band: int = 2) -> str:
         for r in range(rows_per_band)
     ]
     return f"concat_ws('_', '{band}', " + ", ".join(parts) + ")"
-
-
-def minhash_band(text: Column, band: int, rows_per_band: int = 2, k: int = 3) -> Column:
-    """LSH band key straight from text (callers doing multiple bands should
-    precompute shingle_hashes once and use band_key_from_hashes)."""
-    return band_key_from_hashes(shingle_hashes(text, k), band, rows_per_band)
-
-
-def minhash_band_sql(text: str, band: int, rows_per_band: int = 2, k: int = 3) -> str:
-    return band_key_from_hashes_sql(shingle_hashes_sql(text, k), band, rows_per_band)
 
 
 # ---------------------------------------------------------------------------

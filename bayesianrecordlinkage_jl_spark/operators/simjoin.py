@@ -43,9 +43,9 @@ over the retained vocabulary.
 
 100-TB notes: per-term join work is bounded at C(max_df, 2) for the
 cosine join; the edit join indexes d*q+1 gram occurrences per key and
-its only window is doc-partitioned (bounded by key length, the
-longest_dup_span precedent). Per-doc term/gram relations are aggregated
-map-side before any join; nothing ever sorts or windows the pair set.
+its only window is doc-partitioned (bounded by key length). Per-doc
+term/gram relations are aggregated map-side before any join; nothing ever
+sorts or windows the pair set.
 The per-doc key relation is localCheckpoint'ed (consumed by the prefix
 emitter and the verify join). Corpora with millions of IDENTICAL keys
 make the output itself quadratic — dedupe exact keys upstream

@@ -1,13 +1,14 @@
-"""Distinct-cardinality sketches over k-word span hashes: HyperLogLog and
-KMV (k-minimum-values), bit-strict across engines.
+"""Sketches, bit-strict across engines: distinct-cardinality sketches over
+k-word span hashes (HyperLogLog and KMV, k-minimum-values), a Count-Min
+token-frequency sketch, and HyperBall per-host neighborhood functions.
 
 Web-scale corpus telemetry runs on sketches, not exact distincts: "how many
 distinct 8-word spans does each source contribute?" is the denominator of
-dedup ratios, contamination rates, and crawl-growth curves, and at 10^12
-documents the exact answer is a full shuffle of every span hash. Built-in
-approx_count_distinct (Spark HLL++) and DuckDB's approx_count_distinct use
-different hash functions and register encodings, so their outputs can never
-be cross-checked. These sketches instead derive every register from the
+dedup ratios and crawl-growth curves, and at 10^12 documents the exact
+answer is a full shuffle of every span hash. Built-in approx_count_distinct
+(Spark HLL++) and DuckDB's approx_count_distinct use different hash
+functions and register encodings, so their outputs can never be
+cross-checked. These sketches instead derive every register from the
 repo's one cross-engine hash (phash = 15 hex chars of md5), keep ALL sketch
 state in integers (order-independent sums -> partitioning-invariant and
 oracle-able to the last bit), and apply the float estimator as a single
@@ -33,9 +34,8 @@ caller can apply linear counting themselves.
 
 KMV: est = (KMV_K - 1) * 2^HASH_BITS / h_k where h_k is the k-th smallest
 DISTINCT hash. The rank-window form compiles to Partial+Final
-WindowGroupLimit (same Catalyst shape pinned for frequency_cap), so each
-map partition ships at most k rows per group — the honest streaming-KMV
-scale shape without a custom UDAF.
+WindowGroupLimit, so each map partition ships at most k rows per group —
+the honest streaming-KMV scale shape without a custom UDAF.
 
 Scale shape overall: one explode + one map-side-combined (group, j) max
 aggregate -> at most m rows per group cross the wire for HLL; KMV ships
@@ -195,229 +195,6 @@ def span_cardinality_sketches_sql(
     FROM hll
     JOIN exact ON hll.grp = exact.grp
     LEFT JOIN kmv ON hll.grp = kmv.grp
-    """
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter broadcast semi-join (decontamination probe without shuffling
-# the corpus-side span set against the benchmark)
-# ---------------------------------------------------------------------------
-#
-# contamination_flags joins every corpus span hash against the benchmark's
-# distinct span set — correct, but the probe relation at 10^12 documents is
-# |corpus spans| rows through a shuffle unless AQE broadcasts the benchmark.
-# The Bloom form compresses the benchmark side to a FIXED-SIZE bitmap
-# (m_bits/32 rows of int64-held 32-bit words), which always broadcasts; the
-# corpus side then never shuffles at all — flags come out of a map-side
-# probe + per-doc aggregate. One-sided error only: every true hit is
-# flagged (no false negatives), a span can false-positive with the standard
-# (n_spans_set/m)^k_hashes rate, so the maybe-set is a SUPERSET that a
-# targeted exact pass (contamination_flags on the flagged docs) confirms.
-#
-# Bit positions use Kirsch-Mitzenmacher double hashing off the one
-# cross-engine hash: pos_j = (h % m + j * h2) % m with
-# h2 = 1 + ((h >> 13) % (m - 1)) — all integer, so the bitmap and every
-# flag are bit-strict across engines. Words hold 32 bits each (masks stay
-# below 2^31: no signed-shift edge cases in either engine).
-
-BLOOM_M_BITS = 1 << 16
-BLOOM_HASHES = 4
-_BW = 32  # bits per bitmap word
-
-
-def span_bloom(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = SPAN_K,
-    m_bits: int = BLOOM_M_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
-    """Build the benchmark-side bitmap: -> (word_idx int, bits bigint),
-    one row per NON-ZERO 32-bit word (bit_or aggregate — order-independent
-    integer state, same discipline as the HLL registers)."""
-    spans = df.select(
-        F.explode(
-            F.transform(
-                T.word_shingles(F.col(text_col), k), lambda s: T.phash(s)
-            )
-        ).alias("h")
-    ).distinct()
-    h = F.col("h")
-    h2 = (F.lit(1).cast("long") + F.shiftright(h, 13) % (m_bits - 1))
-    probes = spans.select(
-        F.explode(
-            F.array(*[((h % m_bits + F.lit(j).cast("long") * h2) % m_bits)
-                      for j in range(n_hashes)])
-        ).alias("pos")
-    )
-    return (
-        probes.select(
-            F.expr(f"CAST(pos DIV {_BW} AS INT)").alias("word_idx"),
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST(pos % {_BW} AS INT))"
-            ).alias("_m"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("_m").alias("bits"))
-    )
-
-
-def bloom_probe_flags(
-    corpus: DataFrame,
-    id_col: str,
-    text_col: str,
-    bloom: DataFrame,
-    k: int = SPAN_K,
-    m_bits: int = BLOOM_M_BITS,
-    n_hashes: int = BLOOM_HASHES,
-    min_hits: int = 1,
-) -> DataFrame:
-    """Probe every corpus span (occurrence, not distinct — mirrors
-    contamination_flags' counting) against the bitmap:
-    -> (doc_id, n_spans, n_maybe, maybe_contaminated). A span is a maybe-
-    hit iff ALL n_hashes probed bits are set. The bloom side is tiny
-    (<= m_bits/32 rows) — broadcast it; the corpus side stays map-side
-    until the per-doc aggregate."""
-    from .corpus import _spread
-
-    hashed = (
-        _spread(corpus, id_col)
-        .select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.transform(
-                T.word_shingles(F.col(text_col), k), lambda s: T.phash(s)
-            ).alias("_gh"),
-        )
-        .groupBy("doc_id")
-        .agg(F.first("_gh").alias("_gh"))
-    )
-    spans = hashed.select(
-        "doc_id", F.posexplode("_gh").alias("span_pos", "h")
-    )
-    h = F.col("h")
-    h2 = (F.lit(1).cast("long") + F.shiftright(h, 13) % (m_bits - 1))
-    probes = spans.select(
-        "doc_id", "span_pos",
-        F.explode(
-            F.array(*[((h % m_bits + F.lit(j).cast("long") * h2) % m_bits)
-                      for j in range(n_hashes)])
-        ).alias("pos"),
-    ).select(
-        "doc_id", "span_pos",
-        F.expr(f"CAST(pos DIV {_BW} AS INT)").alias("word_idx"),
-        F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), CAST(pos % {_BW} AS INT))"
-        ).alias("_m"),
-    )
-    joined = probes.join(F.broadcast(bloom), on="word_idx", how="left")
-    bit_set = (
-        F.coalesce(F.col("bits"), F.lit(0).cast("long"))
-        .bitwiseAND(F.col("_m")) == F.col("_m")
-    )
-    per_span = (
-        joined.groupBy("doc_id", "span_pos")
-        .agg(F.min(bit_set.cast("int")).alias("_all_set"))
-    )
-    return (
-        per_span.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_spans"),
-            F.sum("_all_set").cast("long").alias("n_maybe"),
-        )
-        .select(
-            "doc_id", "n_spans", "n_maybe",
-            (F.col("n_maybe") >= min_hits).alias("maybe_contaminated"),
-        )
-    )
-
-
-def _bloom_probe_pos_sql(h: str, j: int, m_bits: int) -> str:
-    h2 = f"(1 + (({h}) >> 13) % {m_bits - 1})"
-    return f"((({h}) % {m_bits} + {j} * {h2}) % {m_bits})"
-
-
-def span_bloom_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    bench_filter: str,
-    k: int = SPAN_K,
-    m_bits: int = BLOOM_M_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> str:
-    """Bitmap twin for a static-filter benchmark over the same table."""
-    grams = (
-        f"list_transform({T.word_shingles_sql(text_col, k)}, "
-        f"s -> {T.phash_sql('s')})"
-    )
-    poss = ", ".join(
-        _bloom_probe_pos_sql("h", j, m_bits) for j in range(n_hashes)
-    )
-    return f"""
-    WITH bspans AS (
-      SELECT DISTINCT unnest({grams}) AS h FROM {table}
-      WHERE {bench_filter}
-    ),
-    probes AS (SELECT unnest([{poss}]) AS pos FROM bspans)
-    SELECT CAST(pos // {_BW} AS INT) AS word_idx,
-           CAST(bit_or(CAST(1 AS BIGINT) << CAST(pos % {_BW} AS INT))
-                AS BIGINT) AS bits
-    FROM probes GROUP BY pos // {_BW}
-    """
-
-
-def bloom_probe_flags_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    bench_filter: str,
-    k: int = SPAN_K,
-    m_bits: int = BLOOM_M_BITS,
-    n_hashes: int = BLOOM_HASHES,
-    min_hits: int = 1,
-) -> str:
-    grams = (
-        f"list_transform({T.word_shingles_sql(text_col, k)}, "
-        f"s -> {T.phash_sql('s')})"
-    )
-    poss = ", ".join(
-        _bloom_probe_pos_sql("h", j, m_bits) for j in range(n_hashes)
-    )
-    bloom = span_bloom_sql(
-        table, id_col, text_col, bench_filter, k, m_bits, n_hashes
-    )
-    return f"""
-    WITH bloom AS MATERIALIZED ({bloom}),
-    hashed AS MATERIALIZED (
-      SELECT CAST({id_col} AS BIGINT) AS doc_id, {grams} AS _gh
-      FROM {table}
-    ),
-    spans AS (
-      SELECT doc_id, u.h, u.span_pos FROM hashed,
-      LATERAL (SELECT unnest(_gh) AS h,
-                      generate_subscripts(_gh, 1) AS span_pos) u
-    ),
-    probes AS (
-      SELECT doc_id, span_pos, unnest([{poss}]) AS pos FROM spans
-    ),
-    checked AS (
-      SELECT p.doc_id, p.span_pos,
-             CASE WHEN COALESCE(b.bits, 0)
-                       & (CAST(1 AS BIGINT) << CAST(p.pos % {_BW} AS INT))
-                  = (CAST(1 AS BIGINT) << CAST(p.pos % {_BW} AS INT))
-                  THEN 1 ELSE 0 END AS hit
-      FROM probes p LEFT JOIN bloom b
-        ON CAST(p.pos // {_BW} AS INT) = b.word_idx
-    ),
-    per_span AS (
-      SELECT doc_id, span_pos, min(hit) AS _all_set
-      FROM checked GROUP BY doc_id, span_pos
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-           CAST(sum(_all_set) AS BIGINT) AS n_maybe,
-           sum(_all_set) >= {min_hits} AS maybe_contaminated
-    FROM per_span GROUP BY doc_id
     """
 
 

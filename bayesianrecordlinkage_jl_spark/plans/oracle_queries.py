@@ -23,7 +23,7 @@ from ..functions import text as T
 from ..functions import weights as W
 from ..functions.text import phash
 from ..operators import (
-    blocking, corpus, crawl, dedup, fusion, incremental, linkgraph,
+    blocking, crawl, dedup, fusion, incremental, linkgraph,
     pprl, similarity, simjoin, sketches,
 )
 from ..operators.comparison_summary import distinct_vectors, marginal_counts
@@ -50,14 +50,10 @@ TOPK_QUERY_MAX_ID = 10
 EMB_DIM_DEDUP = 64
 EMB_COS_MIN = 0.3  # sf testdata max pairwise cosine is ~0.51
 EMB_LSH_PLANES = 4
-SPAN_K = 8  # duplicated-span gram width (words)
 # FS decision thresholds: all three bands non-empty at every SF
 # (sf0.001: 1/53/1409, sf0.01: 2/53/1566, sf0.1: 67/5083/154143)
 FS_LOWER, FS_UPPER = -1.0, 2.0
 REVIEW_K = 200  # clerical-review queue capacity (top-k by weight)
-# 80/10/10 + SPAN_K gives real cross-split span collisions at sf0.01
-# (near-dup planted docs landing on opposite sides of the hash split)
-DECON_SPLITS = {"train": 80, "val": 10, "test": 10}
 SNM_WINDOW = 6  # sorted-neighborhood sliding-window width
 TFCOS_MIN_E4 = 2500   # tf-cosine^2 >= 0.25 (cos >= 0.5) in 1e-4 units
 TFCOS_MAX_DF = 100    # tf-cosine stop-term document-frequency cap
@@ -1783,132 +1779,6 @@ def build_catalog() -> dict[str, dict]:
         "ref": "embedding-cosine near-dup (sign-LSH buckets + exact verify)",
     }
 
-    # --- corpus curation (training-data ops; operators/corpus.py) ---
-    cat["dedup_cluster_keep"] = {
-        "spark": lambda s, d: corpus.near_dup_clusters_keep(
-            load(s, d, "documents"), "doc_id", "text", "n_chars"
-        ),
-        "sql": corpus.near_dup_clusters_keep_sql(
-            "documents", "doc_id", "text", "n_chars"
-        ),
-        "ref": "near-dup pairs -> transitive clusters -> canonical keep "
-        "(longest doc, id tie-break); turns LSH pair detection into a "
-        "deduplicated corpus",
-    }
-    cat["dup_span_stats"] = {
-        "spark": lambda s, d: corpus.duplicated_span_stats(
-            load(s, d, "documents"), "doc_id", "text", k=SPAN_K
-        ),
-        "sql": corpus.duplicated_span_stats_sql(
-            "documents", "doc_id", "text", k=SPAN_K
-        ),
-        "ref": "exact duplicated k-word spans across documents "
-        "(Lee et al. 2022 substring dedup, relational form)",
-    }
-    cat["corpus_splits"] = {
-        "spark": lambda s, d: corpus.hash_split(
-            load(s, d, "documents"), "doc_id",
-            {"train": 98, "val": 1, "test": 1},
-        ),
-        "sql": corpus.hash_split_sql(
-            "documents", "doc_id", {"train": 98, "val": 1, "test": 1}
-        ),
-        "ref": "deterministic hash-bucketed train/val/test assignment",
-    }
-    cat["repetition_stats"] = {
-        "spark": lambda s, d: corpus.ngram_repetition_stats(
-            load(s, d, "documents"), "doc_id", "text", k=2
-        ),
-        "sql": corpus.ngram_repetition_stats_sql(
-            "documents", "doc_id", "text", k=2
-        ),
-        "ref": "within-document n-gram repetition signals "
-        "(Gopher/MassiveText quality filter)",
-    }
-    cat["decontamination"] = {
-        "spark": lambda s, d: corpus.contamination_flags(
-            load(s, d, "documents"), "doc_id", "text",
-            load(s, d, "documents").where("doc_id % 37 = 0"),
-            "doc_id", "text", k=SPAN_K, min_hits=1,
-        ),
-        "sql": corpus.contamination_flags_sql(
-            "documents", "doc_id", "text", "doc_id % 37 = 0",
-            k=SPAN_K, min_hits=1,
-        ),
-        "ref": "benchmark decontamination: flag corpus docs sharing "
-        "k-word spans with a (static-filter) benchmark set",
-    }
-    # Bloom twin of `decontamination`: same benchmark filter, bitmap probe
-    # instead of a span-set join — the broadcastable 100-TB shape; its
-    # maybe-set is a superset of the exact flags (one-sided error),
-    # asserted in test_sketches.
-    cat["bloom_decontamination"] = {
-        "spark": lambda s, d: sketches.bloom_probe_flags(
-            load(s, d, "documents"), "doc_id", "text",
-            sketches.span_bloom(
-                load(s, d, "documents").where("doc_id % 37 = 0"),
-                "doc_id", "text", k=SPAN_K,
-            ),
-            k=SPAN_K, min_hits=1,
-        ),
-        "sql": sketches.bloom_probe_flags_sql(
-            "documents", "doc_id", "text", "doc_id % 37 = 0",
-            k=SPAN_K, min_hits=1,
-        ),
-        "ref": "decontamination probe via a Bloom bitmap (Kirsch-"
-        "Mitzenmacher double hashing, 32-bit words, bit_or state): "
-        "benchmark side compresses to a fixed-size broadcastable relation",
-    }
-    cat["frequency_caps"] = {
-        "spark": lambda s, d: corpus.frequency_cap(
-            load(s, d, "documents"), "doc_id", "source", cap=10
-        ),
-        "sql": corpus.frequency_cap_sql(
-            "documents", "doc_id", "source", cap=10
-        ),
-        "ref": "per-source frequency capping (C4/RefinedWeb domain cap): "
-        "deterministic-hash uniform keep of <=cap docs per source, "
-        "WindowGroupLimit plan shape",
-    }
-    cat["packed_sequences"] = {
-        "spark": lambda s, d: corpus.pack_sequences(
-            load(s, d, "documents").select(
-                "doc_id", T.token_count(F.col("text")).alias("n_tokens")
-            ),
-            "doc_id", "n_tokens", budget=256, n_buckets=8,
-        ),
-        "sql": corpus.pack_sequences_sql(
-            "documents", "doc_id", T.token_count_sql("text"),
-            budget=256, n_buckets=8,
-        ),
-        "ref": "greedy whole-document sequence packing into 256-token "
-        "training windows, hash-sharded across 8 independent packers "
-        "(applyInPandas scan; recursive-CTE oracle replay)",
-    }
-    cat["curation_pipeline"] = {
-        "spark": lambda s, d: corpus.curation_pipeline(
-            load(s, d, "documents"), "doc_id", "text", "source"
-        ),
-        "sql": corpus.curation_pipeline_sql(
-            "documents", "doc_id", "text", "source"
-        ),
-        "ref": "end-to-end curation: quality+repetition gate -> near-dup "
-        "cluster keep -> domain cap -> split -> packed training windows, "
-        "one relational pipeline (oracle composes the per-stage twins)",
-    }
-    cat["split_decontamination"] = {
-        "spark": lambda s, d: corpus.split_decontamination(
-            load(s, d, "documents"), "doc_id", "text",
-            DECON_SPLITS, k=SPAN_K, min_hits=1,
-        ),
-        "sql": corpus.split_decontamination_sql(
-            "documents", "doc_id", "text", DECON_SPLITS, k=SPAN_K, min_hits=1
-        ),
-        "ref": "train/test leakage audit: flags TRAIN docs sharing k-word "
-        "spans with held-out TEST docs under the deterministic hash split "
-        "(split membership is a per-row function — no split-table join)",
-    }
-
     cat["dedup_containment"] = {
         "spark": lambda s, d: dedup.containment_pairs(
             load(s, d, "documents"), "doc_id", "text"
@@ -2138,42 +2008,6 @@ def build_catalog() -> dict[str, dict]:
         "iterative min-plus joins — unweighted companion to trustrank)",
     }
 
-    # --- longest duplicated span: the gaps-and-islands companion to
-    # dup_span_stats (run length of CONSECUTIVE duplicated shingle
-    # positions — the exact-substring-dedup cut signal). ---
-    cat["longest_dup_span"] = {
-        "spark": lambda s, d: corpus.longest_dup_span(
-            load(s, d, "documents"), "doc_id", "text", k=SPAN_K
-        ),
-        "sql": corpus.longest_dup_span_sql("documents", "doc_id", "text", k=SPAN_K),
-        "ref": "longest duplicated substring per doc (consecutive "
-        "duplicated k-gram runs via idx - row_number islands; one "
-        "doc-partitioned window, never corpus-wide)",
-    }
-
-    # --- per-host language mix (Simpson concentration: the log-free
-    # diversity index, one exact-integer division -> bit-strict) ---
-    cat["host_language_profile"] = {
-        "spark": lambda s, d: corpus.group_language_profile(
-            load(s, d, "documents").select(
-                linkgraph.page_host("doc_id").alias("host"), "lang"
-            ),
-            "host",
-            "lang",
-        ).withColumnRenamed("grp", "host"),
-        "sql": "SELECT grp AS host, n_docs, n_langs, top_lang, "
-        "top_lang_docs, simpson FROM ("
-        + corpus.group_language_profile_sql(
-            f"(SELECT {linkgraph.page_host_sql('doc_id')} AS host, lang "
-            "FROM documents)",
-            "host",
-            "lang",
-        )
-        + ")",
-        "ref": "per-host language mix profile (monolingual vs content-farm "
-        "signal; Simpson concentration replaces entropy — no logs)",
-    }
-
     # --- SALSA hub/authority (the HITS-family mutual recursion with
     # random-walk normalization — bounded integers, no overflow) ---
     cat["salsa_hosts"] = {
@@ -2274,19 +2108,6 @@ def build_catalog() -> dict[str, dict]:
         "rounds, bit-strict integer state",
     }
 
-    # --- text analysis (training-data ops) ---
-    cat["corpus_quantiles"] = {
-        "spark": lambda s, d: corpus.exact_group_quantiles(
-            load(s, d, "documents"), ["lang"], "n_chars"
-        ),
-        "sql": corpus.exact_group_quantiles_sql(
-            "documents", ["lang"], "n_chars"
-        ),
-        "ref": "exact rank-based per-group percentiles — the calibration "
-        "profile for curation thresholds (approx_percentile/quantile "
-        "sketches differ across engines; rank selection is the portable "
-        "exact form)",
-    }
     cat["text_stats"] = {
         "spark": lambda s, d: load(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism * 2, "doc_id")
@@ -5307,19 +5128,6 @@ def build_catalog() -> dict[str, dict]:
         "half-open validity intervals per canonical url (consecutive "
         "identical re-fetches merge; change boundaries open new versions; "
         "the open version carries a shared sentinel, never NULL)",
-    }
-
-    # --- exact-substring dedup rewrite (Lee et al. 2022, removal half) -----
-    cat["dedup_span_rewrite"] = {
-        "spark": lambda s, d: corpus.span_rewrite(
-            load(s, d, "documents"), "doc_id", "text", k=SPAN_K
-        ),
-        "sql": corpus.span_rewrite_sql("documents", "doc_id", "text", k=SPAN_K),
-        "ref": "exact-substring dedup with text REWRITE: every k-word span "
-        "hash occurring >= 2x in the corpus is cut from all but its global "
-        "first occurrence, surviving tokens re-joined byte-identically in "
-        "both engines — the removal half of Lee et al. 2022 "
-        "(dup_span_stats is the measurement half)",
     }
 
     return cat

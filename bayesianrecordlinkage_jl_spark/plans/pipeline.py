@@ -41,6 +41,8 @@ LEV_PREFIX = 80
 # block size (skew control)
 KEY_BLOCK_MAX_ROWS = 64
 EM_MAX_ITER = 200
+# largest block (in pairs) that method="exact_posterior" enumerates
+EXACT_MAX_BLOCK_PAIRS = 10
 # threshold step of the size-capped block split
 BLOCK_SPLIT_INCR = 0.5
 
@@ -54,9 +56,8 @@ class LinkageConfig:
     # per-block solver: hungarian / greedy / auction (MAP matching), or
     # "exact_posterior" = the reference's Bayes estimate (link iff exact
     # posterior marginal > 1/2, enumerated per block; blocks above
-    # exact_max_block_pairs fall back to Hungarian MAP)
+    # EXACT_MAX_BLOCK_PAIRS fall back to Hungarian MAP)
     method: str = "hungarian"
-    exact_max_block_pairs: int = 10
     # cap on pairs per resolution block; oversized components are re-clustered
     # at rising thresholds (iterative_bipartite_cluster2 analog) so no block
     # can blow up the per-block solver at scale. The blocks are also
@@ -303,11 +304,11 @@ def run_linkage(
             small_ids = (
                 bp.groupBy("block_id")
                 .agg(F.count(F.lit(1)).alias("_np"))
-                .where(F.col("_np") <= cfg.exact_max_block_pairs)
+                .where(F.col("_np") <= EXACT_MAX_BLOCK_PAIRS)
                 .select("block_id")
             )
             exact = exact_posterior_links(
-                bp, max_pairs_per_block=cfg.exact_max_block_pairs
+                bp, max_pairs_per_block=EXACT_MAX_BLOCK_PAIRS
             ).select("id_a", "id_b", "block_id")
             exact_w = exact.join(
                 blocked.select("id_a", "id_b", "w"), on=["id_a", "id_b"]

@@ -7,9 +7,12 @@ table grows continuously, so the engine needs an incremental path:
   expressions as batch — one code path) -> watermarked dedup on url ->
   append to the staging table the batch pipeline consumes.
 
-Micro-batch near-dup flagging joins each batch's LSH band keys against the
-(static, periodically refreshed) corpus band index — a stream-static join,
-which Spark executes without state buildup.
+Stateful operators: fingerprint dedup (dedup_on_fingerprint) and SCD2
+page versions (track_page_versions), both applyInPandasWithState with a
+processing-time state timeout. Stateless ones: watermarked window stats,
+and micro-batch near-dup flagging, which joins each batch's LSH band keys
+against the (static, periodically refreshed) corpus band index — a
+stream-static join, which Spark executes without state buildup.
 """
 
 from __future__ import annotations
@@ -221,48 +224,6 @@ def flag_near_dups(
     return banded.join(band_index, on="band_key").select(
         "url", "warc_ts", "corpus_id", "band_key"
     )
-
-
-def benchmark_span_index(
-    benchmark: DataFrame, id_col: str, text_col: str, k: int = 8
-) -> DataFrame:
-    """DISTINCT (gh) k-word-span hash set over a benchmark/test corpus —
-    the STATIC side of streaming decontamination. Same span hashes as
-    operators.corpus.contamination_flags (functions.text.phash over
-    word_shingles), so batch and stream flag identically. Test sets are
-    small, so per-micro-batch re-reads broadcast."""
-    return (
-        benchmark.select(
-            F.explode(
-                F.transform(
-                    T.word_shingles(F.col(text_col), k), lambda s: T.phash(s)
-                )
-            ).alias("gh")
-        )
-        .distinct()
-    )
-
-
-def flag_contaminated(
-    stream: DataFrame,
-    span_index: DataFrame,
-    text_col: str = "text",
-    k: int = 8,
-) -> DataFrame:
-    """Micro-batch benchmark decontamination: stream-static equi-join of
-    each page's k-word-span hashes against benchmark_span_index. Emits
-    HIT RECORDS (url, warc_ts, gh) in append mode — stateless, one row
-    per (page span, benchmark span) collision; the staging consumer
-    drops (or routes for review) any url with >= min_hits distinct hits,
-    mirroring the batch rule in corpus.contamination_flags."""
-    spans = stream.withColumn(
-        # expensive alias referenced once, but keep the two-step projection
-        # shape shared with flag_near_dups (one md5 pass per row, explode
-        # outside codegen)
-        "_gh",
-        F.transform(T.word_shingles(F.col(text_col), k), lambda s: T.phash(s)),
-    ).select("url", "warc_ts", F.explode("_gh").alias("gh"))
-    return spans.join(span_index, on="gh").select("url", "warc_ts", "gh")
 
 
 def track_page_versions(

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline linkage + near-dup, corpus-curation,
+"""Benchmark harness: headline linkage + near-dup,
 similarity-search and windowed-aggregation catalog queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
@@ -170,12 +170,6 @@ def main() -> None:
         "embedding_topk_ivf",
         "exact_posterior_links",
         "one_to_one_links",
-        "dedup_cluster_keep",
-        "dup_span_stats",
-        "decontamination",
-        "repetition_stats",
-        "frequency_caps",
-        "packed_sequences",
         "pagerank_hosts",
         "host_cocitation",
         "span_sketches",
@@ -183,8 +177,6 @@ def main() -> None:
         "latest_snapshots",
         "trustrank_hosts",
         "host_seed_distance",
-        "longest_dup_span",
-        "host_language_profile",
         "salsa_hosts",
         "fs_review_queue",
         "host_triangles",
@@ -200,7 +192,6 @@ def main() -> None:
         "kcore_hosts",
         "bcubed_metrics",
         "hyperball_hosts",
-        "corpus_quantiles",
         "pprl_clk_pairs",
         "pprl_clk_band_pairs",
         "soft_tfidf_pairs",
@@ -217,7 +208,6 @@ def main() -> None:
         "canopy_clusters",
         "stable_relabel",
         "pair_pr_curve",
-        "dedup_span_rewrite",
         "scd2_page_versions",
         "truth_discovery",
         "star_clusters_links",

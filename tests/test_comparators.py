@@ -59,6 +59,8 @@ def duck():
 
 def test_cross_engine_parity_text_functions(spark, duck):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").limit(60)
+    shh = T.shingle_hashes(F.col("text"), 3)
+    shh_sql = T.shingle_hashes_sql("text", 3)
     sdf = (
         docs.select(
             "doc_id",
@@ -67,8 +69,8 @@ def test_cross_engine_parity_text_functions(spark, duck):
             T.lang_id(F.col("text")).alias("lid"),
             T.quality_score(F.col("text")).alias("q"),
             T.doc_fingerprint(F.col("text")).alias("fp"),
-            T.minhash_col(F.col("text"), 0).alias("mh0"),
-            T.minhash_band(F.col("text"), 1).alias("band1"),
+            T.minhash_from_hashes(shh, 0).alias("mh0"),
+            T.band_key_from_hashes(shh, 1).alias("band1"),
         )
         .orderBy("doc_id")
         .toPandas()
@@ -77,7 +79,8 @@ def test_cross_engine_parity_text_functions(spark, duck):
         f"""SELECT doc_id, {T.token_count_sql('text')} AS tc,
         {T.simhash_sql('text')} AS sh, {T.lang_id_sql('text')} AS lid,
         {T.quality_score_sql('text')} AS q, {T.doc_fingerprint_sql('text')} AS fp,
-        {T.minhash_col_sql('text', 0)} AS mh0, {T.minhash_band_sql('text', 1)} AS band1
+        {T.minhash_from_hashes_sql(shh_sql, 0)} AS mh0,
+        {T.band_key_from_hashes_sql(shh_sql, 1)} AS band1
         FROM (SELECT * FROM documents ORDER BY doc_id LIMIT 60) ORDER BY doc_id"""
     ).df()
     for col in ["tc", "sh", "lid", "q", "fp", "mh0", "band1"]:

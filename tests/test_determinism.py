@@ -32,15 +32,6 @@ QUERIES = [
     "one_to_one_links",
     "exact_posterior_links",
     "phonetic_keys",
-    "dedup_cluster_keep",
-    "dup_span_stats",
-    "decontamination",
-    "repetition_stats",
-    "corpus_splits",
-    "frequency_caps",
-    "packed_sequences",
-    "curation_pipeline",
-    "split_decontamination",
     "extract_links",
     "host_link_graph",
     "pagerank_hosts",
@@ -54,11 +45,8 @@ QUERIES = [
     "link_increment",
     "incremental_components",
     "cluster_metrics",
-    "bloom_decontamination",
     "trustrank_hosts",
     "host_seed_distance",
-    "longest_dup_span",
-    "host_language_profile",
     "salsa_hosts",
     "fs_decision_counts",
     "fs_review_queue",
@@ -77,7 +65,6 @@ QUERIES = [
     "kcore_hosts",
     "bcubed_metrics",
     "hyperball_hosts",
-    "corpus_quantiles",
     "pprl_clk_pairs",
     "pprl_clk_band_pairs",
     # round-4 pytest-only-row promotions
@@ -115,7 +102,6 @@ QUERIES = [
     "embedding_label_consistency",
     "lexical_diversity",
     "posterior_calibration",
-    "dedup_span_rewrite",
     "scd2_page_versions",
     "truth_discovery",
     "source_trust",

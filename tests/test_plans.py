@@ -193,22 +193,6 @@ def test_lsh_band_join_is_narrow(spark):
         assert "_bk#" in line, line
 
 
-def test_frequency_cap_partial_window_group_limit(spark):
-    """The domain-cap rank<=cap filter must be rewritten into a
-    WindowGroupLimit with a PARTIAL (map-side, pre-shuffle) stage — a
-    Zipf-hot key then ships at most `cap` rows per input partition
-    instead of its full row set. Losing the Partial stage reintroduces
-    the full-key shuffle at web scale."""
-    from bayesianrecordlinkage_jl_spark.operators import corpus
-
-    df = corpus.frequency_cap(
-        oq.load(spark, SF, "documents"), "doc_id", "source", cap=10
-    )
-    plan = _plan(df)
-    assert "WindowGroupLimit" in plan
-    assert "Partial" in plan and "Final" in plan
-
-
 def test_review_queue_take_ordered_not_global_sort(spark):
     """The clerical-review top-K must compile to TakeOrderedAndProject
     (per-partition K-heaps merged at the driver), NOT a global Sort +

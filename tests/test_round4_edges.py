@@ -1,42 +1,14 @@
 """Degenerate-input probes for the round-4 operators: empty inputs,
-shorter-than-k documents, single-source claims, pre-convergence rounds —
-the contract edges the catalog fixture never hits."""
+single-source claims, pre-convergence rounds — the contract edges the
+catalog fixture never hits."""
 
-import pandas as pd
-
-from bayesianrecordlinkage_jl_spark.operators import corpus, crawl
+from bayesianrecordlinkage_jl_spark.operators import crawl
 from bayesianrecordlinkage_jl_spark.operators.connected_components import (
     max_spanning_forest, star_clusters,
 )
 from bayesianrecordlinkage_jl_spark.operators.fusion import (
     TD_SCALE, source_trust, truth_discovery,
 )
-
-
-def test_span_rewrite_short_docs_share_single_shingle(spark):
-    # docs shorter than k collapse to ONE shingle covering all tokens:
-    # an exact short-doc duplicate is removed entirely, first stays
-    pdf = pd.DataFrame({"doc_id": [0, 1, 2],
-                        "text": ["tiny doc", "tiny doc", "other words"]})
-    out = (
-        corpus.span_rewrite(spark.createDataFrame(pdf), "doc_id", "text", k=8)
-        .toPandas().set_index("doc_id").sort_index()
-    )
-    assert out.loc[0, "new_text"] == "tiny doc"
-    assert out.loc[1, "new_text"] == "" and out.loc[1, "n_removed"] == 2
-    assert out.loc[2, "new_text"] == "other words"
-
-
-def test_span_rewrite_empty_text_rows_survive(spark):
-    pdf = pd.DataFrame({"doc_id": [0, 1], "text": ["", ""]})
-    out = (
-        corpus.span_rewrite(spark.createDataFrame(pdf), "doc_id", "text", k=3)
-        .toPandas().set_index("doc_id").sort_index()
-    )
-    # zero tokens: nothing to remove, rows still present with empty text
-    assert list(out["n_tokens"]) == [0, 0]
-    assert list(out["n_removed"]) == [0, 0]
-    assert list(out["new_text"]) == ["", ""]
 
 
 def test_scd2_empty_input_keeps_schema(spark):

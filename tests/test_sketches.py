@@ -102,94 +102,6 @@ def test_short_text_and_missing_kmv(spark):
     assert row["hll_n_zero"] == SK.M_REG - 1
 
 
-# --- Bloom-filter broadcast decontamination probe --------------------------
-
-
-def _bloom_replica(bench_texts, probe_texts, m_bits=SK.BLOOM_M_BITS,
-                   n_hashes=SK.BLOOM_HASHES):
-    """Python replica: bitmap from benchmark spans, per-doc maybe counts."""
-    bits = set()
-    for t in bench_texts:
-        for h in set(_spans(t)):
-            h2 = 1 + (h >> 13) % (m_bits - 1)
-            for j in range(n_hashes):
-                bits.add((h % m_bits + j * h2) % m_bits)
-    out = []
-    for t in probe_texts:
-        spans = _spans(t)
-        maybe = 0
-        for h in spans:
-            h2 = 1 + (h >> 13) % (m_bits - 1)
-            if all((h % m_bits + j * h2) % m_bits in bits
-                   for j in range(n_hashes)):
-                maybe += 1
-        out.append((len(spans), maybe))
-    return out
-
-
-def test_bloom_probe_matches_python_replica(spark):
-    bench = [
-        "the quick brown fox jumps over the lazy dog every single day",
-        "spark shuffles partition data across executors during wide joins",
-    ]
-    probe = [
-        bench[0],                                              # full hit
-        "completely different words that share nothing at all with them",
-        "prefix words then the quick brown fox jumps over the lazy dog every single day",
-    ]
-    bdf = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(bench)], "doc_id long, text string"
-    )
-    pdf = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(probe)], "doc_id long, text string"
-    )
-    bloom = SK.span_bloom(bdf, "doc_id", "text")
-    got = {
-        r["doc_id"]: (r["n_spans"], r["n_maybe"])
-        for r in SK.bloom_probe_flags(pdf, "doc_id", "text", bloom).collect()
-    }
-    want = _bloom_replica(bench, probe)
-    for i, w in enumerate(want):
-        assert got[i] == w, (i, got[i], w)
-    assert got[0][1] == got[0][0]  # identical doc: every span hits
-    assert got[1][1] == 0          # disjoint vocab: no false positives here
-
-
-def test_bloom_is_superset_of_exact_flags(spark):
-    """One-sided error: every exactly-contaminated doc is maybe-flagged and
-    n_maybe >= n_hits per doc (same span counting)."""
-    from bayesianrecordlinkage_jl_spark.operators import corpus as CO
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = docs.where("doc_id % 37 = 0")
-    exact = {
-        r["doc_id"]: r["n_hits"]
-        for r in CO.contamination_flags(
-            docs, "doc_id", "text", bench, "doc_id", "text", k=SK.SPAN_K
-        ).collect()
-    }
-    bloom = SK.span_bloom(bench, "doc_id", "text", k=SK.SPAN_K)
-    maybe = {
-        r["doc_id"]: r["n_maybe"]
-        for r in SK.bloom_probe_flags(
-            docs, "doc_id", "text", bloom, k=SK.SPAN_K
-        ).collect()
-    }
-    assert set(exact) == set(maybe)
-    for d, nh in exact.items():
-        assert maybe[d] >= nh, d
-
-
-def test_bloom_bitmap_shape(spark):
-    bdf = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    rows = SK.span_bloom(bdf, "doc_id", "text").collect()
-    assert all(0 <= r["word_idx"] < SK.BLOOM_M_BITS // 32 for r in rows)
-    assert all(0 < r["bits"] < (1 << 32) for r in rows)
-
-
 # --- HyperBall ----------------------------------------------------------------
 
 

@@ -190,53 +190,6 @@ def test_stream_static_near_dup_flagging(spark, stream_dirs):
     assert plan.count("md5") <= 2, plan.count("md5")
 
 
-def test_stream_static_decontamination(spark, stream_dirs):
-    """flag_contaminated: pages sharing k-word spans with the benchmark
-    set collide with the static span index (stateless stream-static
-    join); the hit set matches the batch operator's flags exactly."""
-    pages = stream_dirs["pages"]
-    bench = pages.limit(10).select(F.col("url").alias("bench_url"), "text")
-    idx = ingest.benchmark_span_index(bench, "bench_url", "text", k=8)
-
-    stream = ingest.read_page_stream(spark, stream_dirs["in"])
-    flags = ingest.flag_contaminated(stream, idx, k=8)
-    q = (
-        flags.writeStream.format("memory")
-        .queryName("contamination_flags")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    hits = spark.sql("SELECT * FROM contamination_flags").toPandas()
-    hit_urls = set(hits["url"])
-    # benchmark pages are themselves in the stream -> must self-flag
-    bench_urls = {r["bench_url"] for r in bench.select("bench_url").collect()}
-    assert bench_urls <= hit_urls
-    # the streamed hit-url set equals the batch operator's contaminated set
-    from bayesianrecordlinkage_jl_spark.operators.corpus import (
-        contamination_flags,
-    )
-    batch_flags = contamination_flags(
-        pages.select(F.col("url").alias("doc_id"), "text").withColumn(
-            "doc_id", F.xxhash64("doc_id")
-        ),
-        "doc_id", "text",
-        bench.select(F.col("bench_url").alias("doc_id"), "text").withColumn(
-            "doc_id", F.xxhash64("doc_id")
-        ),
-        "doc_id", "text", k=8,
-    ).where("contaminated")
-    batch_ids = {r["doc_id"] for r in batch_flags.collect()}
-    stream_ids = {
-        r["h"]
-        for r in pages.where(F.col("url").isin(list(hit_urls)))
-        .select(F.xxhash64("url").alias("h"))
-        .collect()
-    }
-    assert stream_ids == batch_ids
-
-
 def test_version_reducer_unit_and_timeout():
     """Handler-level: version opens on first sight and on every fp
     change; identical re-fetches are absorbed; timeout removes state."""
