@@ -806,8 +806,8 @@ def canopy_clusters_sql(
     sim_col: str = "sim",
     rounds: int = 10,
 ) -> str:
-    """Twin of canopy_clusters: fixed-round chained-CTE replay (the kcore
-    / kwikcluster pattern)."""
+    """Twin of canopy_clusters: fixed-round chained-CTE replay, one CTE
+    per round (as in the kwikcluster twin)."""
     ctes = [
         f"""base AS (
       SELECT CAST({id_a} AS BIGINT) AS src, CAST({id_b} AS BIGINT) AS dst,

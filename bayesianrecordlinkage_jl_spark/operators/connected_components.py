@@ -454,8 +454,8 @@ def kwikcluster(
     (adjacent pivots are impossible: each would need the smaller key);
     every active node with a pivot neighbor joins its MINIMUM-key pivot
     neighbor; both deactivate. Rounds are synchronous and fixed-count, so
-    the DuckDB twin replays them as chained CTEs (the kcore pattern) and
-    the output is well-defined even pre-convergence: nodes still active
+    the DuckDB twin replays them as one chained CTE per round and the
+    output is well-defined even pre-convergence: nodes still active
     after `rounds` rounds exit as singletons with assigned_round = -1.
     Every round clusters at least the globally-minimum active node, and
     under the hash order the expected round count is O(log n); the
@@ -557,8 +557,8 @@ def _pivot_rounds(
 def kwikcluster_sql(edges_expr: str, rounds: int = 10) -> str:
     """Twin of kwikcluster: the fixed-round synchronous replay as chained
     CTEs (DuckDB recursive CTEs can reference the recursive relation only
-    once; each round here consumes the active set three times — the kcore
-    peel-replay pattern)."""
+    once; each round here consumes the active set three times — hence one
+    chained CTE per round)."""
     ctes = [
         f"""eraw AS (
       SELECT greatest(src, dst) AS src, least(src, dst) AS dst

@@ -1,6 +1,6 @@
 """Sketches, bit-strict across engines: distinct-cardinality sketches over
-k-word span hashes (HyperLogLog and KMV, k-minimum-values), a Count-Min
-token-frequency sketch, and HyperBall per-host neighborhood functions.
+k-word span hashes (HyperLogLog and KMV, k-minimum-values) and a Count-Min
+token-frequency sketch.
 
 Web-scale corpus telemetry runs on sketches, not exact distincts: "how many
 distinct 8-word spans does each source contribute?" is the denominator of
@@ -320,141 +320,3 @@ def countmin_heavy_hitters_sql(
     GROUP BY _tok, _n
     HAVING min(c.counter) >= {hh_min}
     """
-
-
-# ---------------------------------------------------------------------------
-# HyperBall: per-host neighborhood-function sketches
-# ---------------------------------------------------------------------------
-
-HYPERBALL_RADIUS = 3
-
-
-def _hll_summary(st: DataFrame, radius: int) -> DataFrame:
-    """Register rows (host, j, mreg) -> one row per host:
-    (host, radius, n_regs, hll_n_zero, hll_sum_fp, hll_est)."""
-    return st.groupBy("host").agg(
-        F.lit(radius).cast("int").alias("radius"),
-        F.count(F.lit(1)).cast("int").alias("n_regs"),
-        (F.lit(M_REG) - F.count(F.lit(1))).cast("int").alias("hll_n_zero"),
-        (
-            F.sum(F.expr(_term_case("mreg")))
-            + (F.lit(M_REG) - F.count(F.lit(1)))
-            * F.lit(1 << RHO_CAP).cast("long")
-        ).cast("long").alias("hll_sum_fp"),
-    ).select(
-        "host", "radius", "n_regs", "hll_n_zero", "hll_sum_fp",
-        (
-            F.expr(ALPHA_FP_SQL) / F.col("hll_sum_fp").cast("double")
-        ).alias("hll_est"),
-    )
-
-
-def hyperball_hosts(
-    edges: DataFrame, radius: int = HYPERBALL_RADIUS
-) -> DataFrame:
-    """edges(src_host, dst_host, ...) -> (host, radius, n_regs,
-    hll_n_zero, hll_sum_fp, hll_est) for every radius 0..`radius`: the
-    HyperBall neighborhood function (Boldi & Vigna, WWW 2013) — per host,
-    an HLL sketch of "how many hosts are reachable within r link hops",
-    the centrality/spam signal ("ball growth rate") exact BFS cannot
-    deliver at web scale (all-pairs frontier state is quadratic; sketch
-    state is <= m integer registers per host).
-
-    Ball recurrence: B(v, r) = B(v, r-1) merged with B(w, r-1) over
-    out-links v -> w; HLL merge is per-register MAX, so each round is one
-    equi-join of the edge list to the register table plus one map-side-
-    combined (host, j) max aggregate — associative, order-free, integer.
-    Register seeds hash each host with the repo's one cross-engine hash
-    (phash), so every value is bit-strict vs DuckDB (same discipline as
-    span_cardinality_sketches above: trailing-zero rho, integer sum_fp,
-    hll_est as one frozen-literal division). Rows per host never exceed
-    min(ball size, m=256); empty registers stay implicit.
-
-    Scale shape: the distinct edge list is materialized once (every round
-    consumes it); per-round register state is localCheckpoint'ed (the
-    next round and the per-radius summary both consume it). Self-loops
-    are dropped (self is in the radius-0 ball already)."""
-    cites = (
-        edges.where(F.col("src_host") != F.col("dst_host"))
-        .select("src_host", "dst_host")
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        cites.select(F.col("src_host").alias("host"))
-        .unionByName(cites.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    st = (
-        nodes.withColumn("_h", T.phash(F.col("host")))
-        .select(
-            "host",
-            F.expr(f"_h % {M_REG}").alias("j"),
-            F.expr(_rho_case(f"(_h div {M_REG})")).alias("mreg"),
-        )
-        .localCheckpoint()
-    )
-    out = _hll_summary(st, 0)
-    for r in range(1, radius + 1):
-        nbr = cites.join(
-            st.select(
-                F.col("host").alias("dst_host"), "j", "mreg"
-            ),
-            on="dst_host",
-        ).select(F.col("src_host").alias("host"), "j", "mreg")
-        st = (
-            st.unionByName(nbr)
-            .groupBy("host", "j")
-            .agg(F.max("mreg").alias("mreg"))
-            .localCheckpoint()
-        )
-        out = out.unionByName(_hll_summary(st, r))
-    return out
-
-
-def hyperball_hosts_sql(
-    edges_sql: str, radius: int = HYPERBALL_RADIUS
-) -> str:
-    """Chained-CTE twin: s0 -> s1 -> ... (same max-merge recurrence),
-    one summary block per radius, UNION ALL'd."""
-    summary = """
-      SELECT host, CAST({r} AS INT) AS radius,
-             CAST(count(*) AS INT) AS n_regs,
-             CAST({m} - count(*) AS INT) AS hll_n_zero,
-             CAST(sum({term}) + ({m} - count(*)) * {empty} AS BIGINT)
-               AS hll_sum_fp,
-             {alpha} / CAST(sum({term}) + ({m} - count(*)) * {empty}
-                            AS DOUBLE) AS hll_est
-      FROM s{r} GROUP BY host"""
-    ctes = [
-        f"""edges AS ({edges_sql})""",
-        """cites AS MATERIALIZED (
-          SELECT DISTINCT src_host, dst_host FROM edges
-          WHERE src_host != dst_host)""",
-        """nodes AS (
-          SELECT DISTINCT host FROM (
-            SELECT src_host AS host FROM cites
-            UNION ALL SELECT dst_host AS host FROM cites))""",
-        f"""s0 AS MATERIALIZED (
-          SELECT host, _h % {M_REG} AS j,
-                 {_rho_case(f"(_h // {M_REG})")} AS mreg
-          FROM (SELECT host, {T.phash_sql('host')} AS _h FROM nodes))""",
-    ]
-    for r in range(1, radius + 1):
-        prev = f"s{r - 1}"
-        ctes.append(f"""s{r} AS MATERIALIZED (
-          SELECT host, j, max(mreg) AS mreg FROM (
-            SELECT host, j, mreg FROM {prev}
-            UNION ALL
-            SELECT e.src_host AS host, p.j, p.mreg
-            FROM cites e JOIN {prev} p ON e.dst_host = p.host
-          ) GROUP BY host, j)""")
-    body = ",\n    ".join(ctes)
-    blocks = "\n    UNION ALL".join(
-        summary.format(
-            r=r, m=M_REG, term=_term_case("mreg"),
-            empty=(1 << RHO_CAP), alpha=ALPHA_FP_SQL,
-        )
-        for r in range(radius + 1)
-    )
-    return f"WITH {body}\n    {blocks}"

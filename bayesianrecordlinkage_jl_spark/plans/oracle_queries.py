@@ -23,8 +23,8 @@ from ..functions import text as T
 from ..functions import weights as W
 from ..functions.text import phash
 from ..operators import (
-    blocking, crawl, dedup, fusion, incremental, linkgraph,
-    pprl, similarity, simjoin, sketches,
+    blocking, crawl, dedup, fusion, incremental, pprl, similarity,
+    simjoin, sketches,
 )
 from ..operators.comparison_summary import distinct_vectors, marginal_counts
 
@@ -1913,113 +1913,6 @@ def build_catalog() -> dict[str, dict]:
         "HLL/KMV cardinality sketches",
     }
 
-    # --- web link graph (operators/linkgraph.py): href extraction, host
-    # graph, fixed-point integer PageRank. The html wrap is derived from
-    # `documents` identically in both engines (same trick as
-    # pages_extract_text); extraction/aggregation/recurrence are the honest
-    # operators. All-integer arithmetic -> bit-strict oracle. ---
-    cat["extract_links"] = {
-        "spark": lambda s, d: linkgraph.extract_links(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": linkgraph.extract_links_sql("documents", "doc_id", "text"),
-        "ref": "crawl-side href extraction (regexp_extract_all over html; "
-        "pure projection, no shuffle)",
-    }
-    cat["host_link_graph"] = {
-        "spark": lambda s, d: linkgraph.host_link_graph(
-            load(s, d, "documents"), "doc_id", "text"
-        ),
-        "sql": linkgraph.host_link_graph_sql("documents", "doc_id", "text"),
-        "ref": "host-level weighted link graph (one map-side-combined agg; "
-        "Zipf-skewed hosts exercise hot keys)",
-    }
-    cat["scc_hosts"] = {
-        "spark": lambda s, d: linkgraph.scc_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.scc_hosts_sql("documents", "doc_id", "text"),
-        "ref": "strongly connected components of the DIRECTED host graph "
-        "(mutual-reachability link rings; trim + forward/backward min-label "
-        "coloring — clustering_functions.jl components are the undirected "
-        "half of the family)",
-    }
-    cat["wl_host_roles"] = {
-        "spark": lambda s, d: linkgraph.wl_host_roles(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.wl_host_roles_sql("documents", "doc_id", "text"),
-        "ref": "1-WL color refinement (Shervashidze et al. 2011 WL kernel "
-        "relabeling) — structural role fingerprints over the directed "
-        "weighted host graph; sorted neighbor-color multisets hashed with "
-        "the cross-engine phash",
-    }
-    cat["host_cocitation"] = {
-        "spark": lambda s, d: linkgraph.host_cocitation(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.host_cocitation_sql("documents", "doc_id", "text"),
-        "ref": "co-citation similarity (skew-capped co-occurrence self-join; "
-        "super-spreader srcs excluded before pairing — per-src work bounded "
-        "at C(max_fanout,2); exact-integer Jaccard)",
-    }
-    cat["pagerank_hosts"] = {
-        "spark": lambda s, d: linkgraph.pagerank_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.pagerank_hosts_sql("documents", "doc_id", "text"),
-        "ref": "fixed-point integer PageRank over the host graph "
-        "(iterative-join family beyond the reference's CC; chained-CTE "
-        "oracle, dangling mass dropped by documented design)",
-    }
-    cat["hits_hosts"] = {
-        "spark": lambda s, d: linkgraph.hits_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.hits_hosts_sql("documents", "doc_id", "text"),
-        "ref": "fixed-point integer HITS hubs/authorities (Kleinberg 1999) "
-        "over the host graph — max-normalized power iteration, chained-CTE "
-        "oracle; completes the PageRank/TrustRank/SALSA authority family",
-    }
-    cat["lpa_communities"] = {
-        "spark": lambda s, d: linkgraph.lpa_communities(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.lpa_communities_sql("documents", "doc_id", "text"),
-        "ref": "synchronous label-propagation communities (Raghavan et al. "
-        "2007) over the host graph — the soft-clustering companion to "
-        "src/clustering_functions.jl's hard connected components",
-    }
-    cat["trustrank_hosts"] = {
-        "spark": lambda s, d: linkgraph.trustrank_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.trustrank_hosts_sql("documents", "doc_id", "text"),
-        "ref": "TrustRank — seeded PageRank whose restart mass goes only "
-        "to a literal host whitelist (the web-spam trust signal; same "
-        "bit-strict integer recurrence, chained-CTE oracle)",
-    }
-    cat["host_seed_distance"] = {
-        "spark": lambda s, d: linkgraph.host_seed_distance(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.host_seed_distance_sql("documents", "doc_id", "text"),
-        "ref": "min link-hop distance from seed hosts (BFS frontier as "
-        "iterative min-plus joins — unweighted companion to trustrank)",
-    }
-
-    # --- SALSA hub/authority (the HITS-family mutual recursion with
-    # random-walk normalization — bounded integers, no overflow) ---
-    cat["salsa_hosts"] = {
-        "spark": lambda s, d: linkgraph.salsa_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.salsa_hosts_sql("documents", "doc_id", "text"),
-        "ref": "SALSA hub/authority scores (Lempel-Moran: HITS recursion "
-        "with per-node out-/in-weight normalization; fixed-point integer, "
-        "chained-CTE oracle)",
-    }
-
     # --- Fellegi-Sunter three-way decision rule (the 1969 A1/A2/A3
     # regions): band counts are one aggregate; the clerical-review queue
     # is a capacity-capped top-k (rank<=K compiles to WindowGroupLimit —
@@ -2073,39 +1966,6 @@ def build_catalog() -> dict[str, dict]:
         "ref": "clerical-review queue: ambiguous band ranked by weight "
         "(highest-evidence ambiguous pairs reviewed first; capacity-capped "
         "top-k so the sort is partial, never global)",
-    }
-
-    # --- triangle counting / local clustering coefficient over the host
-    # graph (degree-ordered orientation — each triangle emitted once,
-    # wedge fan-out bounded even on skew-hot hosts) ---
-    cat["host_triangles"] = {
-        "spark": lambda s, d: linkgraph.host_triangles(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.host_triangles_sql("documents", "doc_id", "text"),
-        "ref": "per-host triangle count + local clustering coefficient "
-        "(degree-ordered orientation: oriented out-degree is O(sqrt(|E|)) "
-        "so hot hosts cannot explode the wedge join)",
-    }
-    cat["kcore_hosts"] = {
-        "spark": lambda s, d: linkgraph.kcore_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": linkgraph.kcore_hosts_sql("documents", "doc_id", "text"),
-        "ref": "k-core of the host graph (Seidman 1983, fixed-round "
-        "synchronous peel) — the dense-subgraph / link-farm signal "
-        "complementing triangles and PageRank",
-    }
-    cat["hyperball_hosts"] = {
-        "spark": lambda s, d: sketches.hyperball_hosts(
-            linkgraph.host_link_graph(load(s, d, "documents"), "doc_id", "text")
-        ),
-        "sql": sketches.hyperball_hosts_sql(
-            linkgraph.host_link_graph_sql("documents", "doc_id", "text")
-        ),
-        "ref": "HyperBall neighborhood function (Boldi & Vigna WWW 2013) — "
-        "per-host HLL ball sketches over link hops; register max-merge "
-        "rounds, bit-strict integer state",
     }
 
     cat["text_stats"] = {
@@ -5088,7 +4948,7 @@ def build_catalog() -> dict[str, dict]:
         "ref": "conflict resolution beyond record_fusion's mode rule: "
         "per-entity winning value under ITERATIVE source-reliability "
         "weighting (Sums/TruthFinder family, integer micro-unit fixed "
-        "point — the fusion analog of pagerank_hosts' recurrence)",
+        "point, replayed as fixed-round chained CTEs)",
     }
     cat["source_trust"] = {
         "spark": lambda s, d: fusion.source_trust(

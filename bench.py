@@ -170,28 +170,19 @@ def main() -> None:
         "embedding_topk_ivf",
         "exact_posterior_links",
         "one_to_one_links",
-        "pagerank_hosts",
-        "host_cocitation",
         "span_sketches",
         "url_canonical",
         "latest_snapshots",
-        "trustrank_hosts",
-        "host_seed_distance",
-        "salsa_hosts",
         "fs_review_queue",
-        "host_triangles",
         "snm_pairs",
         "meta_blocking",
         "semdedup",
-        "lpa_communities",
         "countmin_heavy_hitters",
         "tf_cosine_pairs",
         "edit_similarity_pairs",
         "record_fusion",
         "monge_elkan_pairs",
-        "kcore_hosts",
         "bcubed_metrics",
-        "hyperball_hosts",
         "pprl_clk_pairs",
         "pprl_clk_band_pairs",
         "soft_tfidf_pairs",
@@ -219,7 +210,6 @@ def main() -> None:
         "single_linkage_profile",
         "constrained_components",
         "one_to_many_links",
-        "hits_hosts",
         "cdc_chunk_dedup",
         "phonetic_blocking_pairs",
         "bitext_topk",
@@ -229,8 +219,6 @@ def main() -> None:
         "blocking_rule_selection",
         # round-4 session-3 additions
         "embedding_topk_pq",
-        "scc_hosts",
-        "wl_host_roles",
         "event_bursts",
         "event_props_stats",
         "k_anonymity_profile",
@@ -261,7 +249,7 @@ def main() -> None:
         # regression; see BENCH/BASELINE.md) and one query must not
         # dominate the whole bench wall.
         for name in HEADLINE + [
-            "record_fusion", "kcore_hosts", "bcubed_metrics",
+            "record_fusion", "bcubed_metrics",
         ]:
             t0 = time.time()
             clear_upstream_memo()

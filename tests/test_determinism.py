@@ -32,39 +32,28 @@ QUERIES = [
     "one_to_one_links",
     "exact_posterior_links",
     "phonetic_keys",
-    "extract_links",
-    "host_link_graph",
-    "pagerank_hosts",
     "span_sketches",
     "url_canonical",
     "latest_snapshots",
-    "host_cocitation",
     "crawl_delta",
     "blocking_quality",
     "dedup_containment",
     "link_increment",
     "incremental_components",
     "cluster_metrics",
-    "trustrank_hosts",
-    "host_seed_distance",
-    "salsa_hosts",
     "fs_decision_counts",
     "fs_review_queue",
-    "host_triangles",
     # round-3 continuation additions
     "snm_pairs",
     "meta_blocking",
     "value_specific_weights",
     "semdedup",
-    "lpa_communities",
     "countmin_heavy_hitters",
     "tf_cosine_pairs",
     "edit_similarity_pairs",
     "record_fusion",
     "monge_elkan_pairs",
-    "kcore_hosts",
     "bcubed_metrics",
-    "hyperball_hosts",
     "pprl_clk_pairs",
     "pprl_clk_band_pairs",
     # round-4 pytest-only-row promotions
@@ -114,7 +103,6 @@ QUERIES = [
     "constrained_components",
     "blocking_rule_selection",
     "phonetic_blocking_pairs",
-    "hits_hosts",
     "cdc_chunk_dedup",
     "stable_marriage_links",
     "many_to_many_links",

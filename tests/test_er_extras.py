@@ -1,9 +1,7 @@
 """Property tests for the round-3 ER-extras: sorted-neighborhood blocking,
-meta-blocking, value-specific weights, SemDeDup, label propagation, and
-Count-Min heavy hitters. Cross-engine value parity is covered by
-test_oracle_parity; these pin the SEMANTICS on hand-built fixtures."""
-
-import itertools
+meta-blocking, value-specific weights, SemDeDup and Count-Min heavy
+hitters. Cross-engine value parity is covered by test_oracle_parity;
+these pin the SEMANTICS on hand-built fixtures."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +10,6 @@ from bayesianrecordlinkage_jl_spark.operators import blocking, dedup, sketches
 from bayesianrecordlinkage_jl_spark.operators.comparison_summary import (
     value_specific_weights,
 )
-from bayesianrecordlinkage_jl_spark.operators.linkgraph import lpa_communities
 
 
 # --- sorted-neighborhood ----------------------------------------------------
@@ -127,27 +124,6 @@ def test_semdedup_drops_higher_id_twin(spark):
     # stricter threshold keeps everything
     out2 = dedup.semdedup(df, "vid", "v", cents, min_cosine=1.1).collect()
     assert all(r["keep"] for r in out2)
-
-
-# --- label propagation --------------------------------------------------------
-
-
-def test_lpa_two_cliques(spark):
-    # two 4-cliques joined by one weak bridge -> two communities
-    cl1 = [f"a{i}" for i in range(4)]
-    cl2 = [f"b{i}" for i in range(4)]
-    edges = [
-        (u, v, 10)
-        for grp in (cl1, cl2)
-        for u, v in itertools.combinations(grp, 2)
-    ] + [("a0", "b0", 1)]
-    df = spark.createDataFrame(edges, ["src_host", "dst_host", "n_links"])
-    labels = {
-        r["host"]: r["label"] for r in lpa_communities(df, iterations=4).collect()
-    }
-    assert len({labels[h] for h in cl1}) == 1
-    assert len({labels[h] for h in cl2}) == 1
-    assert labels["a1"] != labels["b1"]
 
 
 # --- Count-Min ---------------------------------------------------------------

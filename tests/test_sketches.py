@@ -100,81 +100,3 @@ def test_short_text_and_missing_kmv(spark):
     assert row["n_spans"] == 2 and row["exact_distinct"] == 1
     assert row["kmv_hk"] is None and row["kmv_est"] is None
     assert row["hll_n_zero"] == SK.M_REG - 1
-
-
-# --- HyperBall ----------------------------------------------------------------
-
-
-def _hb_reg(host: str):
-    h = _ph(host)
-    j = h % SK.M_REG
-    w = h // SK.M_REG
-    rho = SK.RHO_CAP
-    if w:
-        rho = min((w & -w).bit_length(), SK.RHO_CAP)
-    return j, rho
-
-
-def _brute_hyperball(pairs, radius):
-    """Exact BFS balls, then the HLL registers of each ball's member set."""
-    adj: dict = {}
-    nodes = set()
-    for s, d in pairs:
-        if s != d:
-            adj.setdefault(s, set()).add(d)
-            nodes.update((s, d))
-    out = {}
-    ball = {v: {v} for v in nodes}
-    for r in range(radius + 1):
-        if r > 0:
-            ball = {
-                v: b | set().union(*(ball.get(w, set()) for w in adj.get(v, ())) or [set()])
-                for v, b in ball.items()
-            }
-        for v, b in ball.items():
-            regs: dict = {}
-            for m in b:
-                j, rho = _hb_reg(m)
-                regs[j] = max(regs.get(j, 0), rho)
-            sum_fp = sum(1 << (SK.RHO_CAP - m) for m in regs.values()) + (
-                SK.M_REG - len(regs)
-            ) * (1 << SK.RHO_CAP)
-            out[(v, r)] = (
-                len(regs), SK.M_REG - len(regs), sum_fp,
-                SK.ALPHA_FP / float(sum_fp),
-            )
-    return out
-
-
-def test_hyperball_matches_exact_ball_registers(spark):
-    pairs = [
-        ("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"),  # chain
-        ("a", "f"), ("f", "a"),                          # 2-cycle
-        ("g", "a"),                                      # feeder
-    ]
-    edges = spark.createDataFrame(
-        [(s, d, 1) for s, d in pairs],
-        "src_host string, dst_host string, n_links long",
-    )
-    got = {
-        (r["host"], r["radius"]): (
-            r["n_regs"], r["hll_n_zero"], r["hll_sum_fp"], r["hll_est"]
-        )
-        for r in SK.hyperball_hosts(edges, radius=3).collect()
-    }
-    assert got == _brute_hyperball(pairs, 3)
-    # ball growth sanity on the chain: a reaches {a,b,f} at r=1 but
-    # {a,b,c,f} at r=2 -> estimate strictly grows
-    assert got[("a", 2)][3] > got[("a", 1)][3] > got[("a", 0)][3]
-
-
-def test_hyperball_ball_is_monotone_everywhere(spark):
-    from bayesianrecordlinkage_jl_spark.operators import linkgraph as LG
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    hb = SK.hyperball_hosts(
-        LG.host_link_graph(docs, "doc_id", "text"), radius=2
-    ).toPandas()
-    piv = hb.pivot(index="host", columns="radius", values="hll_sum_fp")
-    # register sums only shrink (more/greater registers) as radius grows
-    assert (piv[1] <= piv[0]).all() and (piv[2] <= piv[1]).all()
